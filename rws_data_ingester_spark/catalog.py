@@ -10,7 +10,6 @@ works over a partitioned directory tree (dt=.../ partitioning) unchanged.
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -29,46 +28,30 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Parquet SCHEMA cache, (applicationId, absolute path) -> StructType.
-# ``spark.read.parquet`` without an explicit schema runs a one-task
-# footer-inference job at DataFrame CONSTRUCTION time — and every query
-# builds a fresh Catalog per invocation, so a 6-table TPC-H composite
-# paid six ~55 ms inference jobs per run (~0.3 s of q5's 0.88 s at
-# sf0.1, measured r11). A production catalog (HMS/Iceberg/Delta) serves
-# the schema from metadata instead of re-reading footers per query;
-# this cache is that behavior for the path-based fixture tables.
-# METADATA ONLY — never rows, never results: the first load of a table
-# in a session still runs Spark's own inference (identical schema by
-# construction), later loads pass it explicitly. Keyed by applicationId
-# so a new session (new driver run, possibly regenerated fixtures)
-# re-probes the footers; fixture files are static within a session.
-_SCHEMA_CACHE: dict[tuple[str, str], "object"] = {}
-
 # Dimension tables small enough to broadcast at any realistic scale factor —
 # a 100 TB fact table still joins against ~KB-MB dims; broadcasting them
 # removes the shuffle on the fact side entirely.
 BROADCAST_DIMS = frozenset({"region", "nation", "supplier"})
 
-# DataFrame HANDLE cache, session -> {absolute path: DataFrame} (r11).
-# One rung above the schema cache: even with the schema passed
-# explicitly, every ``spark.read.schema(s).parquet(path)`` costs a
-# DataFrameReader round-trip chain plus a fresh relation resolution
-# (file listing) on the JVM — ~40-50 ms per table per query invocation,
-# ~0.3 s of a 6-table composite's construction at sf0.1. A DataFrame is
-# an immutable logical-plan HANDLE, not data: serving the same handle is
-# exactly what ``spark.table`` does against a catalog's cached relation,
-# every downstream operator builds a new plan on top of it, and every
-# action still reads the parquet files from disk — no rows, no results,
-# nothing keyed on fixture CONTENT is stored. WeakKeyDictionary on the
-# SparkSession: a stopped/garbage-collected session drops its handles,
-# and handles can never leak across sessions (a Dataset is bound to the
-# session that created it). Same staleness caveat as the schema cache,
-# documented there: rewriting files under the SAME path mid-session
-# serves a handle whose resolved file list may predate the rewrite
-# (fixture dirs are static within a session; tests use fresh tmp dirs).
-_DF_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
+# DataFrame HANDLE cache, one dict per session held ON the session object
+# under this attribute: {absolute path: DataFrame}. Without it every
+# query's fresh Catalog ran a one-task parquet footer-inference job plus a
+# DataFrameReader chain and a relation resolution (file listing) per table
+# — ~40-50 ms per table per query invocation, ~0.3 s of a 6-table
+# composite's construction at sf0.1 (r11). A DataFrame is an immutable
+# logical-plan HANDLE, not data: serving the same handle is exactly what
+# ``spark.table`` does against a catalog's cached relation, every
+# downstream operator builds a new plan on top of it, and every action
+# still reads the parquet files — no rows, no results, nothing keyed on
+# fixture CONTENT is stored. Lifetime: the handles reference their
+# session, so the dict lives on the session itself; the session→dict→
+# handle→session cycle is freed with the session (a WeakKeyDictionary
+# keyed on the session never evicts, because its values keep the key
+# alive). Staleness caveat: rewriting files under the SAME path
+# mid-session serves a handle whose resolved file list may predate the
+# rewrite (fixture dirs are static within a session; tests use fresh tmp
+# dirs).
+_HANDLES_ATTR = "_rws_table_handles"
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -89,20 +72,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # it per-load like the TZ, not only in the session factory.
     spark.conf.set("spark.sql.ansi.enabled", "true")
     path = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
-    per_session = _DF_CACHE.setdefault(spark, {})
-    cached = per_session.get(path)
-    if cached is not None:
-        return cached
-    key = (spark.sparkContext.applicationId, path)
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
+    handles = vars(spark).setdefault(_HANDLES_ATTR, {})
+    df = handles.get(path)
+    if df is None:
         df = spark.read.parquet(path)
-        _SCHEMA_CACHE[key] = df.schema
-    else:
-        df = spark.read.schema(schema).parquet(path)
-    if name == "events":
-        df = normalize_event_ts(df)
-    per_session[path] = df
+        if name == "events":
+            df = normalize_event_ts(df)
+        handles[path] = df
     return df
 
 

@@ -10,16 +10,20 @@ The reference (rotterdam_swimming_advice.py) has no dedup surface; this
 module is part of the [EXT] LLM-training-data mandate.
 
 Scale design:
-- Min-label propagation, one shuffle per round (symmetric edge join +
-  groupBy id with map-side partial min). Near-dup graphs are shallow —
-  a duplicate cluster is a near-clique because every member collides
-  with the root in some band — so convergence takes 2-4 rounds in
-  practice, independent of corpus size.
-- Per-round state is one label per EDGE-TOUCHING vertex only; isolated
-  vertices (the overwhelming majority of a corpus) are attached as
-  self-components by a single broadcast anti-join at the end. Per-round
-  shuffle volume therefore scales with the candidate set, not the
-  corpus.
+- At or under ``driver_max_edges`` candidate edges the components are
+  resolved by a driver-side union-find over the collected pairs; the
+  candidate graph is the compressed form of the dedup problem, orders
+  smaller than the corpus.
+- Above the gate, the alternating large-star/small-star rounds of
+  Kiveris et al., "Connected Components in MapReduce and Beyond" (SOCC
+  2014): O(log n) rounds on any graph shape, so an adversarially deep
+  near-dup chain (doc A ~ B ~ C ~ ... with no shared band between the
+  ends) converges where min-label propagation needs diameter rounds.
+  Each round is two window-min passes over the canonical edge list.
+- Per-round state covers EDGE-TOUCHING vertices only; isolated vertices
+  (the overwhelming majority of a corpus) are attached as
+  self-components by a single anti-join at the end. Per-round shuffle
+  volume therefore scales with the candidate set, not the corpus.
 - CC input is ``lsh_star_edges`` (member → bucket-min), not the clique
   pairs: same components (equivalence-tested), but edge count is linear
   instead of quadratic in bucket size — one hot 10k-member bucket
@@ -28,22 +32,16 @@ Scale design:
   ``spark.sparkContext.setCheckpointDir`` + ``checkpoint`` to durable
   storage); without it the iterative plan grows unboundedly and the
   optimizer re-derives every prior round each action.
-- For adversarially deep graphs (long chains), ``connected_components_star``
-  implements the alternating large-star/small-star rounds of Kiveris et
-  al., "Connected Components in MapReduce and Beyond" (SOCC 2014) —
-  O(log n) rounds regardless of diameter, same output contract
-  (equivalence-tested on random graphs, corpus LSH edges, and a
-  150-node chain where propagation provably cannot finish). Shallow
-  dedup graphs keep the cheaper propagation form.
-- The per-round convergence check is a driver-side ``count`` of changed
-  labels — inherent to any iterative fixpoint (GraphX/MLlib do the
-  same); it moves one long per round, never data.
+- The per-round convergence check is a driver-side ``sum`` over the
+  checkpointed labels — inherent to any iterative fixpoint (GraphX/MLlib
+  do the same); it moves one number per round, never data.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window as W
 
 from rws_data_ingester_spark.catalog import Catalog
 from rws_data_ingester_spark.operators.dedup import (
@@ -65,91 +63,128 @@ def connected_components(
     ``component`` is the minimum node id reachable from ``id``.
 
     **EAGER**: calling this function executes Spark jobs immediately — the
-    edge lineage is materialized once (``localCheckpoint``) and counted to
-    pick a strategy, and the propagation loop's per-round convergence
-    probes are actions. Callers that only want to inspect a plan or schema
-    without paying the (possibly corpus-wide) edge computation should not
-    call this until they intend to run it.
+    edge lineage is materialized once (``localCheckpoint``) and probed to
+    pick a strategy, and the distributed rounds' convergence probes are
+    actions. Callers that only want to inspect a plan or schema without
+    paying the (possibly corpus-wide) edge computation should not call
+    this until they intend to run it.
 
     ``vertices`` (single-column ``id`` DataFrame) optionally adds
     isolated nodes, which come back as their own component. Raises
-    ``RuntimeError`` if the fixpoint is not reached within ``max_iter``
-    rounds (never observed on shallow dedup graphs; see module docstring
-    for the O(log n) alternative).
+    ``RuntimeError`` if the distributed fixpoint is not reached within
+    ``max_iter`` star rounds (O(log n) rounds suffice on any graph).
 
     Edges with a NULL endpoint are DROPPED up front (an edge to nothing
     is not an edge): filtering before the strategy gate makes the two
-    paths below agree on dirty input — previously a NULL-endpoint edge
-    crashed the driver union-find's compare while the distributed path
-    half-kept it (F.min skips nulls, joins drop them), so the result
-    depended on the size threshold. A node that only appeared in null
+    paths below agree on dirty input. A node that only appeared in null
     edges comes back as its own component iff it is in ``vertices``,
     same as any isolated node.
 
     Adaptive strategy, the broadcast-join-threshold analog: the edge
     list is checkpointed once (a single execution of the corpus-wide
-    MinHash→LSH lineage) and counted; at or under ``driver_max_edges``
-    the components are resolved by a driver-side union-find over the
-    collected pairs (≈3 MB at the 200k default — the candidate-pair set
-    is already the compressed representation of the dedup problem, many
-    orders smaller than the corpus) instead of paying 2-4 rounds of
-    join+agg+checkpoint jobs whose fixed overhead dwarfs the data at
+    MinHash→LSH lineage); at or under ``driver_max_edges`` the
+    components are resolved by a driver-side union-find over the
+    collected pairs (≈3 MB at the 200k default) instead of paying rounds
+    of join+agg+checkpoint jobs whose fixed overhead dwarfs the data at
     that size (measured ~2 s → ~0.3 s on the sf0.1 funnel). Above the
     threshold — the 100 TB regime, where a boilerplate-heavy corpus can
-    emit billions of candidate edges — the distributed min-label
-    propagation below runs unchanged. Both paths produce the identical
-    min-id labeling (equivalence pinned in tests/test_cluster_mixing.py
-    on random graphs, the corpus LSH edges, and null-endpoint edges)."""
+    emit billions of candidate edges — the distributed large-star /
+    small-star rounds run (``_star_components``). Both paths produce the
+    identical min-id labeling (equivalence pinned in
+    tests/test_cluster_mixing.py on random graphs, the corpus LSH edges,
+    a deep chain, and null-endpoint edges)."""
     half = edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     _require_matching_endpoint_types(half)
     half = half.na.drop().localCheckpoint(eager=True)
     # Strategy probe and driver-path input in ONE bounded job: a
     # limit(gate+1) collect over the checkpointed edges both decides the
     # path (len > gate ⇒ distributed) and, at or under the gate, already
-    # holds every edge the union-find needs — the previous count() +
-    # collect() pair burned two scheduler rounds on the same materialized
-    # RDD (r10 job-count audit). Driver transfer stays bounded by the
-    # gate (+1 row) on any input size.
+    # holds every edge the union-find needs. Driver transfer stays
+    # bounded by the gate (+1 row) on any input size.
     probe = half.limit(driver_max_edges + 1).collect()
     if len(probe) <= driver_max_edges:
         return _with_isolated(_driver_components(half, probe), vertices)
+    return _with_isolated(_star_components(half, max_iter), vertices)
 
-    sym = half.union(
-        half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+
+def _canon(a: F.Column, b: F.Column) -> list[F.Column]:
+    return [F.least(a, b).alias("id_a"), F.greatest(a, b).alias("id_b")]
+
+
+def _sym(edges: DataFrame) -> DataFrame:
+    """Both directions of every canonical edge, as ``(u, v)``."""
+    return edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v")).union(
+        edges.select(F.col("id_b").alias("u"), F.col("id_a").alias("v"))
     )
-    # Propagate over EDGE-TOUCHING vertices only. Isolated vertices are
-    # their own component by definition and never change, so carrying
-    # them through every round just multiplies per-round shuffle volume:
-    # a near-dup graph touches a few percent of the corpus, and labels
-    # must scale with the CANDIDATE set, not the corpus — they are
-    # attached as self-components once, at the end.
-    endpoints = sym.select(F.col("src").alias("id")).distinct()
-    labels = endpoints.select("id", F.col("id").alias("component"))
-    labels = labels.localCheckpoint(eager=False)
 
-    # Convergence probe: labels only ever DECREASE under min-propagation,
-    # so sum(component) is monotone non-increasing and stationary exactly
-    # at the fixpoint — one cheap scan of the checkpointed labels per
-    # round instead of a join-and-compare shuffle.
-    prev_sum = labels.agg(F.sum("component")).collect()[0][0]
-    if prev_sum is None:  # no edges: every vertex is isolated
-        return _with_isolated(labels, vertices)
+
+def _labels(edges: DataFrame) -> DataFrame:
+    """``(id, component)`` with component = min(Γ(id) ∪ {id})."""
+    return (
+        _sym(edges)
+        .groupBy("u")
+        .agg(F.min("v").alias("_mv"))
+        .select(F.col("u").alias("id"), F.least("u", "_mv").alias("component"))
+    )
+
+
+def _star(edges: DataFrame, moves) -> DataFrame:
+    """One star step: with m = min(Γ(u) ∪ {u}), every neighbor v of u with
+    ``moves(u, v)`` re-attaches to m, and u itself attaches to m. m comes
+    from a window over u, so the step is one shuffle on u. The output may
+    repeat edges (at most two rows per directed edge, so it stays linear
+    in the input); the caller dedups once per round."""
+    sym = _sym(edges).withColumn(
+        "m", F.least("u", F.min("v").over(W.partitionBy("u")))
+    )
+    return (
+        sym.filter(moves(F.col("u"), F.col("v")))
+        .select(*_canon(F.col("v"), F.col("m")))
+        .union(sym.select(*_canon(F.col("u"), F.col("m"))))
+    )
+
+
+def _star_components(half: DataFrame, max_iter: int) -> DataFrame:
+    """Alternating large-star / small-star rounds (Kiveris et al., SOCC
+    2014) over the checkpointed ``(src, dst)`` edges → the min-id
+    labeling of every edge-touching vertex.
+
+    large-star(u): every neighbor v > u re-attaches to m = min(Γ(u) ∪ {u});
+    small-star(u): every neighbor v < u attaches to m. Both also keep
+    (u, m), so self-loops survive (a vertex seen only in a self-loop
+    keeps its own label, as in the union-find) and each vertex's label
+    can only decrease from round to round while the vertex set stays
+    fixed. sum(component) over the labels is therefore stationary exactly
+    at the fixpoint: one aggregate per round instead of a join-and-compare
+    shuffle. The sum runs in decimal(38,0), so 64-bit ids cannot overflow
+    it; ids must be numeric on this branch.
+
+    The checkpoints are lazy: the sum's job stores the blocks it computes,
+    with no separate count job per checkpoint."""
+    cur = (
+        half.select(*_canon(F.col("src"), F.col("dst")))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+    labels, prev_sum = _checkpointed_labels(cur)
     for _ in range(max_iter):
-        nbr_labels = (
-            sym.join(labels, sym["dst"] == labels["id"])
-            .select(F.col("src").alias("id"), "component")
+        large = _star(cur, lambda u, v: v > u)
+        cur = (
+            _star(large, lambda u, v: v < u)
+            .distinct()
+            .localCheckpoint(eager=False)
         )
-        labels = (
-            nbr_labels.union(labels)
-            .groupBy("id")
-            .agg(F.min("component").alias("component"))
-            .localCheckpoint(eager=True)
-        )
-        cur_sum = labels.agg(F.sum("component")).collect()[0][0]
+        labels, cur_sum = _checkpointed_labels(cur)
         if cur_sum == prev_sum:
-            return _with_isolated(labels, vertices)
+            return labels
         prev_sum = cur_sum
     raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+
+
+def _checkpointed_labels(edges: DataFrame):
+    labels = _labels(edges).localCheckpoint(eager=False)
+    total = labels.agg(F.sum(F.col("component").cast("decimal(38,0)"))).collect()[0][0]
+    return labels, total
 
 
 def union_find_labels(pairs) -> dict:
@@ -157,7 +192,7 @@ def union_find_labels(pairs) -> dict:
     → {id: component} for every edge-touching id. Union-by-min-root
     keeps each tree's root equal to the minimum id of its set, so
     ``find(x)`` IS the min reachable id — the exact labeling the
-    distributed min-label propagation produces (property-tested against
+    distributed star rounds produce (property-tested against
     a BFS reference in tests/test_cluster_mixing.py)."""
     parent: dict = {}
 
@@ -187,9 +222,8 @@ def _require_matching_endpoint_types(half: DataFrame) -> None:
     other side could fail createDataFrame verification where the
     distributed union path would silently coerce — the same
     gate-dependent-divergence class as the null-edge fix. A real
-    ``TypeError`` (not ``assert``, which ``python -O`` strips) and a
-    shared call site in ``connected_components`` /
-    ``connected_components_star`` make both paths reject identically."""
+    ``TypeError`` (not ``assert``, which ``python -O`` strips) raised
+    before the gate makes both paths reject identically."""
     src_type = half.schema[half.columns[0]].dataType
     dst_type = half.schema[half.columns[1]].dataType
     if src_type != dst_type:
@@ -200,7 +234,7 @@ def _require_matching_endpoint_types(half: DataFrame) -> None:
 
 def _driver_components(half: DataFrame, rows: list) -> DataFrame:
     """Union-find over an already-collected (small-by-gate) edge list →
-    the same ``(id, component)`` labeling as the distributed propagation.
+    the same ``(id, component)`` labeling as the distributed star rounds.
     ``half`` supplies only the schema and session; the caller's strategy
     probe already paid the collect.
 
@@ -230,17 +264,17 @@ def _driver_components(half: DataFrame, rows: list) -> DataFrame:
 
 
 def _with_isolated(labels: DataFrame, vertices: DataFrame | None) -> DataFrame:
-    """Union the propagated labels with self-components for vertices that
-    touch no edge (one anti-join at the end instead of dragging the whole
-    corpus through every propagation round).
+    """Union the labels with self-components for vertices that touch no
+    edge (one anti-join at the end instead of dragging the whole corpus
+    through every distributed round).
 
-    The anti-join side must be the CHECKPOINTED ``labels`` — whose id set
-    equals the edge-endpoint set by construction — not the pre-checkpoint
-    ``endpoints`` frame: that lineage reaches back through the whole edge
-    pipeline (MinHash → LSH for the dedup queries), so using it here would
+    The anti-join side must be the CHECKPOINTED (or driver-local)
+    ``labels`` — whose id set equals the edge-endpoint set by
+    construction — not a frame whose lineage reaches back through the
+    whole edge pipeline (MinHash → LSH for the dedup queries): that would
     re-execute the corpus-wide signature computation once per consumption
     of the result, and a nondeterministic edge input could even disagree
-    with the propagation actually performed."""
+    with the rounds actually performed."""
     if vertices is None:
         return labels
     isolated = (
@@ -259,8 +293,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the component; singletons map to themselves) and the cluster size.
     Pipeline: MinHash signatures → LSH band candidates → connected
     components → join back to the full corpus."""
-    from pyspark.sql.window import Window as W
-
     d = Catalog(spark, sf_dir).documents
     sigs = minhash_signature(d.select("doc_id", "text"), "doc_id", "text")
     edges = lsh_star_edges(sigs, "doc_id")
@@ -308,108 +340,3 @@ def pipeline_near_dedup_remove(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("source")
     )
-
-
-# --------------------------------------------------------------------------
-# Alternating large-star / small-star connected components
-# (Kiveris et al., "Connected Components in MapReduce and Beyond",
-# SOCC 2014) — O(log n) rounds regardless of graph diameter, vs the
-# diameter-bounded min-label propagation above. Same output contract.
-# --------------------------------------------------------------------------
-def _canon(a: F.Column, b: F.Column):
-    return [F.least(a, b).alias("id_a"), F.greatest(a, b).alias("id_b")]
-
-
-def _sym(edges: DataFrame) -> DataFrame:
-    half = edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-    return half.union(
-        half.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-
-
-def _neighborhood_mins(sym: DataFrame) -> DataFrame:
-    """(u, m) where m = min(Γ(u) ∪ {u})."""
-    return (
-        sym.groupBy("u")
-        .agg(F.min("v").alias("_mv"))
-        .select("u", F.least(F.col("u"), F.col("_mv")).alias("m"))
-    )
-
-
-def connected_components_star(
-    edges: DataFrame,
-    vertices: DataFrame | None = None,
-    max_iter: int = 30,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    rounds — O(log n) rounds on ANY graph shape, so adversarially deep
-    chains (pathological near-dup graphs: doc A ~ B ~ C ~ ... with no
-    shared band between the ends) converge where min-label propagation
-    needs diameter rounds. Per round: two groupBy-min + join passes over
-    the canonical edge list, lineage cut with localCheckpoint. Output and
-    contract match ``connected_components`` exactly (equivalence-tested).
-
-    large-star(u): every neighbor v > u re-attaches to m = min(Γ⁺(u));
-    small-star(u): every neighbor v < u attaches to m, plus (u, m).
-    The fixpoint is the star from every node to its component minimum."""
-    _require_matching_endpoint_types(edges.select("id_a", "id_b"))
-    cur = (
-        edges.select(*_canon(F.col("id_a"), F.col("id_b")))
-        .filter(F.col("id_a") != F.col("id_b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    prev_labels: DataFrame | None = None
-    for _ in range(max_iter):
-        # large star
-        sym = _sym(cur)
-        mins = _neighborhood_mins(sym)
-        joined = sym.join(mins, "u")
-        large = (
-            joined.filter(F.col("v") > F.col("u"))
-            .select(*_canon(F.col("v"), F.col("m")))
-            .union(mins.select(*_canon(F.col("u"), F.col("m"))))
-            .filter(F.col("id_a") != F.col("id_b"))
-            .distinct()
-        )
-        # small star
-        sym2 = _sym(large)
-        mins2 = _neighborhood_mins(sym2)
-        joined2 = sym2.join(mins2, "u")
-        cur = (
-            joined2.filter(F.col("v") < F.col("u"))
-            .select(*_canon(F.col("v"), F.col("m")))
-            .union(mins2.select(*_canon(F.col("u"), F.col("m"))))
-            .filter(F.col("id_a") != F.col("id_b"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        labels = _neighborhood_mins(_sym(cur)).select(
-            F.col("u").alias("id"), F.col("m").alias("component")
-        ).localCheckpoint(eager=True)
-        if prev_labels is not None:
-            changed = (
-                labels.alias("a")
-                .join(prev_labels.alias("b"), "id", "full")
-                .filter(
-                    F.col("a.component").isNull()
-                    | F.col("b.component").isNull()
-                    | (F.col("a.component") != F.col("b.component"))
-                )
-                .count()
-            )
-            if changed == 0:
-                break
-        prev_labels = labels
-    else:
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} rounds"
-        )
-    out = prev_labels
-    if vertices is not None:
-        out = (
-            vertices.toDF("id")
-            .join(out, "id", "left")
-            .select("id", F.coalesce("component", F.col("id")).alias("component"))
-        )
-    return out

@@ -301,7 +301,7 @@ def sink_zorder_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     # wide exchange. The r8 sweep's lone near-flag was exactly this
     # audit's previous spelling: two exceptAll passes re-shuffled the
     # full corpus twice and profiled alpha 1.58 / 76% of the query at
-    # sf10 (98.6 s of 130 s; scripts/profile_zorder.py, SCALE.md §r9),
+    # sf10 (98.6 s of 130 s; SCALE.md §r9),
     # which is not an audit a 100 TB pipeline can run. A false
     # "identical" now requires count+sum+xor of 64-bit row hashes to
     # collide simultaneously (~2^-128 for random corruption; this is a

@@ -686,17 +686,6 @@ def simsearch_topk_exact_np(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_topk_np(e.filter(F.col("vec_id") < 10), e, k=5)
 
 
-# Input size up to which the pair-scoring self-join gets an explicit
-# uniform spread (below, the join broadcasts and plans NO exchange of
-# its own; above, the sort-merge join plans its own ENSURE_REQUIREMENTS
-# exchanges and AQE's skew-join splitting manages hot blocks — adding a
-# non-join-key exchange there would be a second full shuffle of the
-# vectors). 64 MiB matches session.py's autoBroadcastJoinThreshold, the
-# knob that decides the same regime; production tunes both together.
-_PAIR_SPREAD_MAX_BYTES_ENV = "SPARK_GRAFT_PAIR_SPREAD_MAX_BYTES"
-_PAIR_SPREAD_MAX_BYTES_DEFAULT = 64 * 1024**2
-
-
 def _spread_pair_frame(vn: DataFrame) -> DataFrame:
     """Spread a pair-scoring frame across the cluster in the
     BROADCAST-JOIN regime (r11, guide §2.5/§2.6).
@@ -722,18 +711,15 @@ def _spread_pair_frame(vn: DataFrame) -> DataFrame:
     SIZE-GATED off in the sort-merge regime: above the gate the join
     plans its own exchanges on the block key (where AQE skew-splitting
     applies) and a non-join-key repartition would add a second full
-    shuffle of the vector payload. The gate is a driver-side metadata
-    stat of the frame's input files (no Spark job, same idiom as the
-    sessionization shard gate); unknown/exotic sources fail TOWARD the
-    scale-safe plain plan."""
-    try:
-        gate = int(
-            os.environ.get(
-                _PAIR_SPREAD_MAX_BYTES_ENV, _PAIR_SPREAD_MAX_BYTES_DEFAULT
-            )
-        )
-    except ValueError:
-        gate = _PAIR_SPREAD_MAX_BYTES_DEFAULT
+    shuffle of the vector payload. The gate is the session's
+    ``spark.sql.autoBroadcastJoinThreshold``, read at call time — the
+    knob that decides the same regime for the planner, so the two cannot
+    drift apart; ≤0 (broadcast disabled) means no spread. The size is a
+    driver-side metadata stat of the frame's input files (no Spark job,
+    same idiom as the sessionization shard gate); unknown/exotic sources
+    fail TOWARD the scale-safe plain plan."""
+    spark = vn.sparkSession
+    gate = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
     if gate <= 0:
         return vn
     try:
@@ -745,7 +731,7 @@ def _spread_pair_frame(vn: DataFrame) -> DataFrame:
         return vn
     if not files or size > gate:
         return vn
-    n = shuffle_partitions(vn.sparkSession)
+    n = shuffle_partitions(spark)
     return vn.repartition(n, F.pmod(F.xxhash64("vec_id"), F.lit(n * 64)))
 
 

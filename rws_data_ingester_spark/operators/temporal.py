@@ -132,11 +132,9 @@ def _events_input_bytes(sf_dir: str) -> int:
 # of events) lands on ONE task whose sort is that user's whole history,
 # while the sharded form bounds every phase-1 task to one user-day and
 # its constant overhead amortizes to noise. 4 GiB keeps every local
-# fixture (sf0.1 events ≈ tens of MB) on the measured plain plan;
-# production sets SPARK_GRAFT_SESSION_SHARD_MIN_BYTES to taste — both
+# fixture (sf0.1 events ≈ tens of MB) on the measured plain plan; both
 # paths are row-identical (equivalence-tested) and share one oracle.
-_SESSION_SHARD_MIN_BYTES_ENV = "SPARK_GRAFT_SESSION_SHARD_MIN_BYTES"
-_SESSION_SHARD_MIN_BYTES_DEFAULT = 4 * 1024**3
+_SESSION_SHARD_MIN_BYTES = 4 * 1024**3
 
 
 @query("session_window_islands", oracle=_SESSION_ORACLE)
@@ -146,7 +144,7 @@ def session_window_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     a session id, then aggregate. One shuffle on user_id; linear per user.
 
     Size-gated dispatch (r10 VERDICT item 4): above
-    ``$SPARK_GRAFT_SESSION_SHARD_MIN_BYTES`` (default 4 GiB) of events
+    ``_SESSION_SHARD_MIN_BYTES`` (4 GiB) of events
     input this returns the row-identical (user_id, day)-sharded
     formulation instead, which bounds the per-task sort to one user-day
     — see ``session_window_sharded`` and the threshold comment above.
@@ -162,12 +160,7 @@ def session_window_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL event time is excluded — Spark's native session_window/window
     drop such rows, so every formulation (and the oracle) states the
     same: a row with no timestamp belongs to no time window."""
-    gate = int(
-        os.environ.get(
-            _SESSION_SHARD_MIN_BYTES_ENV, _SESSION_SHARD_MIN_BYTES_DEFAULT
-        )
-    )
-    if _events_input_bytes(sf_dir) >= gate:
+    if _events_input_bytes(sf_dir) >= _SESSION_SHARD_MIN_BYTES:
         return session_window_sharded(spark, sf_dir)
     ev = Catalog(spark, sf_dir).events.filter(F.col("ts").isNotNull())
     w = W.partitionBy("user_id").orderBy("ts", "event_id")

@@ -41,565 +41,15 @@ from rws_data_ingester_spark.sources import pyds  # noqa: F401
 from rws_data_ingester_spark.operators import vectors, ids, tokenizer, scale  # noqa: F401
 from rws_data_ingester_spark.operators import timeseries  # noqa: F401
 
-# Front-promote the round-3 check window regardless of module order.
-# Round 3 rotates the driver's 50-slot correctness gate onto the queries
-# that have never had a driver row (CORRECTNESS_r01 ∪ r02): the
-# late-round-2 timeseries/mixing/quality batch, the UDF surface, the
-# oracle-paired stream_* tier, the remaining scalar families, and the two
-# real-codec multimodal decode queries (rows-only by design). Exactly 50
-# names; the ledger lives in COVERAGE.md and the composition is pinned by
-# tests/test_oracle_parity.py::test_driver_check_window_is_the_curated_round3_set.
-ROUND3_WINDOW = (
-    # temporal / timeseries batch tier
-    "timeseries_gapfill",
-    "cohort_retention",
-    "scd2_intervals",
-    "engagement_rolling_active",
-    "trend_wow_revenue",
-    "timeseries_anomaly_zscore",
-    "rollup_time_hierarchy",
-    # aggregate tier
-    "agg_histogram",
-    "agg_collect_set",
-    "data_quality_audit",
-    # dedup / embedding tier
-    "dedup_paragraphs",
-    "embedding_quantize_int8",
-    "embedding_centroids",
-    # ids / text / chunking tier
-    "ids_assign_contiguous",
-    "text_length_outliers",
-    "text_chunk_overlap",
-    "text_token_count_bpe",
-    # mixing / sampling / quality tier
-    "pipeline_train_val_test",
-    "pipeline_mix_temperature",
-    "sample_deterministic",
-    "sample_stratified_capped",
-    "pipeline_data_mix",
-    "text_pii_redact",
-    "text_contamination",
-    "text_vocab_oov",
-    "text_repetition",
-    "pipeline_quality_filter",
-    # join tier
-    "join_salted_skew",
-    "join_lateral_topn",
-    "join_null_safe",
-    # scale / SQL passthrough
-    "pipeline_cached_reuse",
-    "sql_passthrough_segment_revenue",
-    # UDF / UDAF / UDTF surface
-    "udf_scalar_vowels",
-    "udaf_geomean_price",
-    "grouped_map_zscore",
-    "udtf_bigrams",
-    "cogroup_click_attribution",
-    "udf_sql_registered",
-    # oracle-paired streaming tier
-    "stream_tumbling_counts",
-    "stream_sliding_counts",
-    "stream_session_windows",
-    "stream_dedup_within_watermark",
-    "stream_static_enrich_purchases",
-    "stream_parquet_sink_recovery",
-    "stream_scheduled_refresh",
-    # remaining scalar families
-    "scalar_bitwise",
-    "scalar_generators",
-    "scalar_encode_map_funcs",
-    # real-codec multimodal decode (rows-only by design)
-    "multimodal_image_decode",
-    "multimodal_audio_features",
-)
-assert len(ROUND3_WINDOW) == 50, len(ROUND3_WINDOW)
-
-# STAGED for the next rotation (flip _ACTIVE_WINDOW when CORRECTNESS_r03
-# lands green): the 21 oracle-paired queries that will then be the last
-# with no driver row ever (COVERAGE.md round-4 ledger) + 29 round-1
-# re-proof slots — r1 greens predate the round-2 14.7k-line growth, so
-# the analytics/relational/aggregate core gets re-proven on current code.
-# (join_asof_last_click / set_intersect_all already re-proven in r02.)
-ROUND4_WINDOW = (
-    # never-checked oracle pairs (21)
-    "scalar_variant_funcs",
-    "source_csv_roundtrip",
-    "source_jsonl_roundtrip",
-    "source_orc_roundtrip",
-    "source_text_roundtrip",
-    "source_binaryfile_scan",
-    "sink_partitioned_pruning",
-    "sink_train_shards",
-    "q2_min_cost_supplier",
-    "q9_product_profit",
-    "q11_important_stock",
-    "q12_priority_by_status",
-    "q16_supplier_part_count",
-    "q20_excess_suppliers",
-    "q21_waiting_suppliers",
-    "pipeline_incremental_merge",
-    "join_interval_bucketed",
-    "agg_corr_covar",
-    "agg_bool",
-    "agg_share_of_total",
-    "agg_grouping_id",
-    # round-1 re-proof (29): the qN analytics core first
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q4_order_priority",
-    "q5_local_supplier_volume",
-    "q6_forecast_revenue",
-    "q7_nation_trade_flow",
-    "q8_market_share",
-    "q10_returned_items",
-    "q13_customer_order_histogram",
-    "q14_promo_share",
-    "q15_top_supplier",
-    "q17_small_quantity_revenue",
-    "q18_large_volume_customers",
-    "q19_bracketed_revenue",
-    "q22_dormant_customers",
-    "filter_predicates",
-    "join_inner_customer_orders",
-    "join_broadcast_star",
-    "join_left_outer",
-    "join_right_outer",
-    "join_full_outer",
-    "join_left_semi",
-    "join_left_anti",
-    "join_theta_self",
-    "join_range_bands",
-    "sort_multi_key_top100",
-    "topk_lineitems",
-    "agg_basic",
-    "agg_rollup",
-)
-assert len(ROUND4_WINDOW) == 50, len(ROUND4_WINDOW)
-
-# STAGED for round 5 (flip _ACTIVE_WINDOW when CORRECTNESS_r04 lands):
-# the 25 queries that will then be the last without ANY driver row
-# (rows-only/local tier: codecs, HTTP replay, stateful streaming, sketch
-# aggregates, reference-pipeline composites, connectors) + the 19-query
-# round-1 re-proof tail (set ops, pivot/unpivot, subqueries, distinct and
-# stats aggregate families) + 6 round-2 re-proofs of the highest-traffic
-# LLM-pipeline greens. After this window runs, all 194 registered queries
-# have at least one driver row — COVERAGE.md keeps the ledger.
-ROUND5_WINDOW = (
-    # never-driver-run tier (25) — rows-only or local-only until now
-    "multimodal_jpeg_decode",
-    "multimodal_adpcm_roundtrip",
-    "source_schema_evolution",
-    "source_json_corrupt_records",
-    "http_fanout_spots",
-    "pipeline_report_offline",
-    "stream_stateful_running_totals",
-    "stream_stream_click_attribution",
-    "agg_freq_items",
-    "agg_hll_sketch_merge",
-    "dedup_clusters",
-    "pipeline_near_dedup_remove",
-    "sample_weighted_reservoir",
-    "pipeline_pack_sequences",
-    "pipeline_training_data",
-    "pipeline_semantic_dedup",
-    "pipeline_quality_classifier",
-    "dedup_incremental_index",
-    "sink_zorder_pruning",
-    "sink_compaction",
-    "source_python_datasource",
-    "simsearch_topk_pq",
-    "bpe_vocab_train",
-    "text_span_corruption",
-    "engagement_wau_hll",
-    # round-1 re-proof tail (19)
-    "limit_offset",
-    "set_union_all",
-    "set_intersect",
-    "set_except",
-    "set_union_distinct",
-    "pivot_status_by_flag",
-    "unpivot_order_metrics",
-    "scalar_subquery_above_avg",
-    "in_subquery_customers",
-    "agg_distinct",
-    "distinct_rows",
-    "agg_approx_distinct_bounds",
-    "agg_cube",
-    "agg_grouping_sets",
-    "agg_filtered",
-    "agg_stats",
-    "agg_approx_percentile_bounds",
-    "agg_min_max_by",
-    "agg_string_collect",
-    # round-2 re-proof (6): highest-traffic LLM-pipeline + window greens
-    "dedup_exact",
-    "simsearch_topk_exact",
-    "text_quality_scores",
-    "window_rank",
-    "scalar_json_funcs",
-    "watermark_cutoff",
-)
-assert len(ROUND5_WINDOW) == 50, len(ROUND5_WINDOW)
-
-# Staged for round 6 (flip once CORRECTNESS_r05 lands): with 194/194
-# coverage reached, the rotation's job becomes re-proof freshness — these
-# are the 44 queries whose LATEST driver row is still round 2 (the oldest
-# evidence vintage in the ledger: the dedup/similarity/text/multimodal/
-# window/scalar/temporal tiers checked before the round-3 growth), plus
-# the first 6 of the round-3 vintage. Staged-window well-formedness is
-# pinned by tests/test_oracle_parity.py::test_round6_staged_window_is_well_formed.
-ROUND6_WINDOW = (
-    # round-2 vintage (44)
-    "data_profile_documents",
-    "dedup_embedding_cosine",
-    "dedup_exact_hash",
-    "dedup_first_event",
-    "dedup_jaccard_pairs",
-    "dedup_minhash_candidates",
-    "dedup_simhash",
-    "funnel_signup_click_purchase",
-    "join_asof_last_click",
-    "multimodal_features",
-    "multimodal_frame_sample",
-    "multimodal_metadata",
-    "multimodal_resize",
-    "pipeline_corpus_clean",
-    "pipeline_embedding_dedup",
-    "pipeline_embedding_dedup_lsh",
-    "scalar_array_funcs",
-    "scalar_collection_hash_funcs",
-    "scalar_datetime_funcs",
-    "scalar_explode_funcs",
-    "scalar_math_funcs",
-    "scalar_string_conditional_funcs",
-    "scalar_string_funcs",
-    "session_window_islands",
-    "session_window_native",
-    "set_intersect_all",
-    "simsearch_lsh_buckets",
-    "simsearch_topk_exact_np",
-    "simsearch_topk_ivf",
-    "simsearch_topk_lsh",
-    "sliding_window_counts",
-    "stream_static_join",
-    "text_fingerprint",
-    "text_langid_heuristic",
-    "text_stats_by_lang",
-    "text_stopword_ratio",
-    "text_tfidf",
-    "text_token_topk",
-    "tumbling_window_hourly",
-    "window_lag_lead",
-    "window_range_frame",
-    "window_running",
-    "window_share_of_group",
-    "window_topk_per_group",
-    # round-3 vintage head (2)
-    "agg_collect_set",
-    "agg_histogram",
-    # newly oracle-paired this round (4, VERDICT r5 task 6): these moved
-    # from rows-only to DuckDB-paired in round 6, so their oracles have
-    # never been driver-checked — first-proof slots, not re-proofs. The
-    # four round-3 heads they displace are staged in ROUND7_WINDOW.
-    "sink_compaction",
-    "source_schema_evolution",
-    "source_json_corrupt_records",
-    "pipeline_pack_sequences",
-)
-assert len(ROUND6_WINDOW) == 50, len(ROUND6_WINDOW)
-
-# Staged for round 7 (flip once CORRECTNESS_r06 lands): the freshness
-# rotation continues oldest-first — the 44 round-3-vintage queries not
-# already re-proved in ROUND6_WINDOW, the 4 round-3 heads that
-# ROUND6_WINDOW's first-proof slots displaced, the alphabetically-first
-# round-4-vintage head, and 1 first-proof slot for the query newly
-# oracle-paired in round 7 (44 + 4 + 1 + 1 = 50).
-# Recomputed from ∪CORRECTNESS_r*.json per the from-round-6-on policy
-# in COVERAGE.md; well-formedness pinned by
-# tests/test_oracle_parity.py::test_round7_staged_window_is_well_formed.
-ROUND7_WINDOW = (
-    # round-3 vintage remainder (44)
-    "embedding_centroids",
-    "embedding_quantize_int8",
-    "engagement_rolling_active",
-    "grouped_map_zscore",
-    "ids_assign_contiguous",
-    "join_lateral_topn",
-    "join_null_safe",
-    "join_salted_skew",
-    "multimodal_audio_features",
-    "multimodal_image_decode",
-    "pipeline_cached_reuse",
-    "pipeline_data_mix",
-    "pipeline_mix_temperature",
-    "pipeline_quality_filter",
-    "pipeline_train_val_test",
-    "rollup_time_hierarchy",
-    "sample_deterministic",
-    "sample_stratified_capped",
-    "scalar_bitwise",
-    "scalar_encode_map_funcs",
-    "scalar_generators",
-    "scd2_intervals",
-    "sql_passthrough_segment_revenue",
-    "stream_dedup_within_watermark",
-    "stream_parquet_sink_recovery",
-    "stream_scheduled_refresh",
-    "stream_session_windows",
-    "stream_sliding_counts",
-    "stream_static_enrich_purchases",
-    "stream_tumbling_counts",
-    "text_chunk_overlap",
-    "text_contamination",
-    "text_length_outliers",
-    "text_pii_redact",
-    "text_repetition",
-    "text_token_count_bpe",
-    "text_vocab_oov",
-    "timeseries_anomaly_zscore",
-    "timeseries_gapfill",
-    "trend_wow_revenue",
-    "udaf_geomean_price",
-    "udf_scalar_vowels",
-    "udf_sql_registered",
-    "udtf_bigrams",
-    # round-3 vintage heads displaced from ROUND6_WINDOW by the four
-    # newly-oracle-paired first-proof slots (4)
-    "cogroup_click_attribution",
-    "cohort_retention",
-    "data_quality_audit",
-    "dedup_paragraphs",
-    # round-4 vintage head (1)
-    "agg_basic",
-    # newly oracle-paired this round (1, VERDICT r6 task 7): the z-order
-    # sink's layout-independent conservation audit moved from rows-only
-    # to DuckDB-paired in round 7, so its ORACLE has never been
-    # driver-checked — a first-proof slot, not a re-proof. The round-4
-    # head it displaces (agg_bool) is staged in ROUND8_WINDOW.
-    "sink_zorder_pruning",
-)
-assert len(ROUND7_WINDOW) == 50, len(ROUND7_WINDOW)
-
-# Staged for round 8 (flip once CORRECTNESS_r07 lands): with round 7
-# re-proving the round-3 vintage, the oldest evidence remaining is the
-# 48 round-4-vintage queries (the r4 first-proof tier: the 22 TPC-H
-# composites, the join matrix, the connector round-trips) plus the
-# round-4 head ROUND7's first-proof slot displaced plus the
-# alphabetically-first round-5-vintage head (48 + 1 + 1 = 50). Recomputed
-# from ∪CORRECTNESS_r*.json through r06 per the COVERAGE.md policy;
-# well-formedness pinned by
-# tests/test_oracle_parity.py::test_round8_staged_window_is_well_formed.
-ROUND8_WINDOW = (
-    # round-4 vintage (48)
-    "agg_corr_covar",
-    "agg_grouping_id",
-    "agg_rollup",
-    "agg_share_of_total",
-    "filter_predicates",
-    "join_broadcast_star",
-    "join_full_outer",
-    "join_inner_customer_orders",
-    "join_interval_bucketed",
-    "join_left_anti",
-    "join_left_outer",
-    "join_left_semi",
-    "join_range_bands",
-    "join_right_outer",
-    "join_theta_self",
-    "pipeline_incremental_merge",
-    "q1_pricing_summary",
-    "q2_min_cost_supplier",
-    "q3_shipping_priority",
-    "q4_order_priority",
-    "q5_local_supplier_volume",
-    "q6_forecast_revenue",
-    "q7_nation_trade_flow",
-    "q8_market_share",
-    "q9_product_profit",
-    "q10_returned_items",
-    "q11_important_stock",
-    "q12_priority_by_status",
-    "q13_customer_order_histogram",
-    "q14_promo_share",
-    "q15_top_supplier",
-    "q16_supplier_part_count",
-    "q17_small_quantity_revenue",
-    "q18_large_volume_customers",
-    "q19_bracketed_revenue",
-    "q20_excess_suppliers",
-    "q21_waiting_suppliers",
-    "q22_dormant_customers",
-    "scalar_variant_funcs",
-    "sink_partitioned_pruning",
-    "sink_train_shards",
-    "sort_multi_key_top100",
-    "source_binaryfile_scan",
-    "source_csv_roundtrip",
-    "source_jsonl_roundtrip",
-    "source_orc_roundtrip",
-    "source_text_roundtrip",
-    "topk_lineitems",
-    # round-4 vintage head displaced from ROUND7_WINDOW by the
-    # sink_zorder_pruning first-proof slot (1)
-    "agg_bool",
-    # round-5 vintage head (1; agg_approx_percentile_bounds rotates to
-    # ROUND9 — r5 evidence is age 4 at round 9, still within the gate)
-    "agg_approx_distinct_bounds",
-)
-assert len(ROUND8_WINDOW) == 50, len(ROUND8_WINDOW)
-
-# Staged for round 9 (flip once CORRECTNESS_r08 lands): with round 8
-# re-proving the round-4 vintage, the oldest evidence remaining is the
-# 44 round-5-vintage queries (the r5 first-proof tier: set ops, pivot/
-# unpivot, subqueries, the dedup/similarity/pipeline heavies, the
-# rows-only codec and stream-stateful queries) plus the 6
-# alphabetically-first round-6-vintage heads (44 + 6 = 50). Recomputed
-# from ∪CORRECTNESS_r*.json through r07 per the COVERAGE.md policy
-# (vintage distribution after r08: 44×r5 + 50×r6 + 50×r7 + 50×r8);
-# well-formedness pinned by
-# tests/test_oracle_parity.py::test_round9_staged_window_is_well_formed.
-ROUND9_WINDOW = (
-    # round-5 vintage (44)
-    "agg_approx_percentile_bounds",
-    "agg_cube",
-    "agg_distinct",
-    "agg_filtered",
-    "agg_freq_items",
-    "agg_grouping_sets",
-    "agg_hll_sketch_merge",
-    "agg_min_max_by",
-    "agg_stats",
-    "agg_string_collect",
-    "bpe_vocab_train",
-    "dedup_clusters",
-    "dedup_exact",
-    "dedup_incremental_index",
-    "distinct_rows",
-    "engagement_wau_hll",
-    "http_fanout_spots",
-    "in_subquery_customers",
-    "limit_offset",
-    "multimodal_adpcm_roundtrip",
-    "multimodal_jpeg_decode",
-    "pipeline_near_dedup_remove",
-    "pipeline_quality_classifier",
-    "pipeline_report_offline",
-    "pipeline_semantic_dedup",
-    "pipeline_training_data",
-    "pivot_status_by_flag",
-    "sample_weighted_reservoir",
-    "scalar_json_funcs",
-    "scalar_subquery_above_avg",
-    "set_except",
-    "set_intersect",
-    "set_union_all",
-    "set_union_distinct",
-    "simsearch_topk_exact",
-    "simsearch_topk_pq",
-    "source_python_datasource",
-    "stream_stateful_running_totals",
-    "stream_stream_click_attribution",
-    "text_quality_scores",
-    "text_span_corruption",
-    "unpivot_order_metrics",
-    "watermark_cutoff",
-    "window_rank",
-    # round-6 vintage heads, alphabetically first (6)
-    "agg_collect_set",
-    "agg_histogram",
-    "data_profile_documents",
-    "dedup_embedding_cosine",
-    "dedup_exact_hash",
-    "dedup_first_event",
-)
-assert len(ROUND9_WINDOW) == 50, len(ROUND9_WINDOW)
-
-# Staged for round 10 (flip once CORRECTNESS_r09 lands): after round 9
-# re-proves the round-5 vintage, the oldest evidence remaining is the
-# 44 round-6-vintage queries not already re-proven by ROUND9 (the
-# scalar-function family, window family, minhash/simhash/jaccard dedup,
-# multimodal metadata tier, text-analysis tier, batch stream twins)
-# plus sink_zorder_pruning — pulled forward per VERDICT r8 task 5
-# because the r8 layout.py fan-out change (_adaptive_n_files) postdates
-# its last driver check (r7) — and the 5 alphabetically-first
-# round-7-vintage heads (44 + 1 + 5 = 50). Recomputed from
-# ∪CORRECTNESS_r*.json through r08 per the COVERAGE.md policy (vintage
-# distribution after r09: 44×r6 + 50×r7 + 50×r8 + 50×r9);
-# well-formedness pinned by
-# tests/test_oracle_parity.py::test_round10_staged_window_is_well_formed.
-ROUND10_WINDOW = (
-    # r8-touched layout query, driver vintage r7 (1; VERDICT r8 task 5)
-    "sink_zorder_pruning",
-    # round-6 vintage remainder (44)
-    "dedup_jaccard_pairs",
-    "dedup_minhash_candidates",
-    "dedup_simhash",
-    "funnel_signup_click_purchase",
-    "join_asof_last_click",
-    "multimodal_features",
-    "multimodal_frame_sample",
-    "multimodal_metadata",
-    "multimodal_resize",
-    "pipeline_corpus_clean",
-    "pipeline_embedding_dedup",
-    "pipeline_embedding_dedup_lsh",
-    "pipeline_pack_sequences",
-    "scalar_array_funcs",
-    "scalar_collection_hash_funcs",
-    "scalar_datetime_funcs",
-    "scalar_explode_funcs",
-    "scalar_math_funcs",
-    "scalar_string_conditional_funcs",
-    "scalar_string_funcs",
-    "session_window_islands",
-    "session_window_native",
-    "set_intersect_all",
-    "simsearch_lsh_buckets",
-    "simsearch_topk_exact_np",
-    "simsearch_topk_ivf",
-    "simsearch_topk_lsh",
-    "sink_compaction",
-    "sliding_window_counts",
-    "source_json_corrupt_records",
-    "source_schema_evolution",
-    "stream_static_join",
-    "text_fingerprint",
-    "text_langid_heuristic",
-    "text_stats_by_lang",
-    "text_stopword_ratio",
-    "text_tfidf",
-    "text_token_topk",
-    "tumbling_window_hourly",
-    "window_lag_lead",
-    "window_range_frame",
-    "window_running",
-    "window_share_of_group",
-    "window_topk_per_group",
-    # round-7 vintage heads, alphabetically first (5)
-    "agg_basic",
-    "cogroup_click_attribution",
-    "cohort_retention",
-    "data_quality_audit",
-    "dedup_paragraphs",
-)
-assert len(ROUND10_WINDOW) == 50, len(ROUND10_WINDOW)
-
-# Staged for round 11 (flip once CORRECTNESS_r10 lands): the two
-# first-proof slots for the operators added in rounds 9-10 with no
-# driver row yet — `join_salted_adaptive` (the hot-key-targeted salted
-# join, r9 VERDICT task 2) and `session_window_sharded` (time-sharded
-# sessionization, r9 VERDICT task 4) — then the 44 round-7-vintage
-# queries (the oldest evidence once round 10 re-proves the round-6
-# tier: the mixing/sampling family, the oracle-paired stream tier, the
-# scalar-misc families, timeseries, the UDF surface) and the 4
-# alphabetically-first round-8-vintage heads (2 + 44 + 4 = 50).
-# Recomputed from ∪CORRECTNESS_r*.json through r09 per the COVERAGE.md
-# policy (vintage distribution after r10, assuming it lands clean:
-# 44×r7 + 50×r8 + 50×r9 + 50×r10 + the 2 dark first-proofs);
-# well-formedness pinned by
-# tests/test_oracle_parity.py::test_round11_staged_window_is_well_formed.
-ROUND11_WINDOW = (
-    # first-proof slots: registered this round, no driver vintage yet
+# The driver's correctness gate checks the first 50 registered queries:
+# ``_ACTIVE_WINDOW`` is promoted to the front regardless of module order.
+# It was chosen by the freshness rotation in COVERAGE.md: first driver rows
+# for `join_salted_adaptive` and `session_window_sharded`, then the
+# round-7-vintage re-proofs, then the 4 alphabetically-first round-8-vintage
+# heads. Past windows live in git history and in the CORRECTNESS_r*.json
+# keys; stage the next one here when the rotation calls for it.
+_ACTIVE_WINDOW = (
+    # first-proof slots: no driver row before this window
     "join_salted_adaptive",
     "session_window_sharded",
     # round-7 vintage (44)
@@ -653,21 +103,7 @@ ROUND11_WINDOW = (
     "agg_corr_covar",
     "agg_grouping_id",
 )
-assert len(ROUND11_WINDOW) == 50, len(ROUND11_WINDOW)
-
-# The window the driver's 50-slot gate sees THIS round. Round 11 flips
-# to the staged ROUND11_WINDOW (CORRECTNESS_r10: 50/50 clean — 39
-# oracle pairs rows+schema+hash green + 11 rows-only at design counts):
-# the freshness rotation gives `join_salted_adaptive` and
-# `session_window_sharded` (both registered in the round-9→10 partial
-# round) their first driver rows, re-proves the 44 round-7-vintage
-# queries now at the freshness boundary (embedding/centroid tier,
-# salted joins, multimodal decode, mix/temperature pipelines, streaming
-# replay twins, text tier 2, timeseries, UDF demos), and starts the
-# round-8 vintage re-proof with its 4 alphabetically-first heads.
-# `text_contamination` sits here too, so the r10 xxhash64-gram rewrite
-# gets its first driver-side oracle row. COVERAGE.md keeps the ledger.
-_ACTIVE_WINDOW = ROUND11_WINDOW
+assert len(_ACTIVE_WINDOW) == 50, len(_ACTIVE_WINDOW)
 
 _missing = [n for n in _ACTIVE_WINDOW if n not in REGISTRY]
 assert not _missing, f"active window names not registered: {_missing}"

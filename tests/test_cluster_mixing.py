@@ -211,83 +211,28 @@ def test_vocab_oov_bounds(spark):
 
 
 # --------------------------------------------------------------------------
-# Large-star / small-star CC (O(log n) rounds)
+# Distributed CC: large-star / small-star rounds (O(log n) rounds)
 # --------------------------------------------------------------------------
-def _cc_sets(rows):
-    from collections import defaultdict
-
-    comp = defaultdict(set)
-    for r in rows:
-        comp[r["component"]].add(r["id"])
-    return sorted(sorted(v) for v in comp.values())
-
-
-def test_star_cc_equals_propagation_on_random_graphs(spark):
-    import random
-
-    from rws_data_ingester_spark.operators.cluster import (
-        connected_components,
-        connected_components_star,
-    )
-
-    for seed in (7, 42, 99):
-        rng = random.Random(seed)
-        n = 60
-        edges = [
-            (rng.randrange(n), rng.randrange(n)) for _ in range(40)
-        ]
-        edf = spark.createDataFrame(
-            [(a, b) for a, b in edges if a != b], "id_a long, id_b long"
-        )
-        verts = spark.createDataFrame([(i,) for i in range(n)], "id long")
-        a = _cc_sets(connected_components(edf, vertices=verts).collect())
-        b = _cc_sets(connected_components_star(edf, vertices=verts).collect())
-        assert a == b, f"seed {seed}"
-
-
 def test_star_cc_beats_propagation_on_deep_chain(spark):
-    """A 150-node chain has diameter 149: min-label propagation cannot
-    finish in 8 rounds; the star alternation needs ~log2(150)+1 ≈ 9
-    (8 halvings + the stability-detection round) — the O(log n) claim,
-    demonstrated rather than asserted."""
-    import pytest as _pytest
-
-    from rws_data_ingester_spark.operators.cluster import (
-        connected_components,
-        connected_components_star,
-    )
-
+    """A 150-node chain has diameter 149: min-label propagation would
+    need ~149 rounds; the distributed star rounds finish within 10
+    (~log2(150) halvings plus the stability-detection round) — the
+    O(log n) claim, demonstrated rather than asserted.
+    driver_max_edges=-1 forces the distributed branch: the driver
+    union-find would otherwise resolve this tiny chain directly."""
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(149)], "id_a long, id_b long"
     )
-    # driver_max_edges=-1 forces the distributed propagation: the gated
-    # driver union-find (round 5) would otherwise resolve this tiny
-    # chain directly and converge trivially.
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iter=8, driver_max_edges=-1)
-    out = connected_components_star(chain, max_iter=10).collect()
+    out = connected_components(chain, max_iter=10, driver_max_edges=-1).collect()
     assert len(out) == 150
     assert {r["component"] for r in out} == {0}
 
 
-def test_star_cc_isolated_vertices(spark):
-    from rws_data_ingester_spark.operators.cluster import connected_components_star
-
-    edf = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    verts = spark.createDataFrame([(i,) for i in range(5)], "id long")
-    out = {r["id"]: r["component"] for r in connected_components_star(edf, vertices=verts).collect()}
-    assert out == {0: 0, 1: 1, 2: 1, 3: 3, 4: 4}
-
-
 def test_star_cc_equals_propagation_on_corpus_lsh_edges(spark):
-    """Both CC algorithms must produce identical clusters on the REAL
-    near-dup graph (MinHash/LSH star edges of the fixture corpus)."""
-    from tests.conftest import SF_DIR
+    """The driver union-find and the distributed star rounds must produce
+    identical clusters on the REAL near-dup graph (MinHash/LSH star edges
+    of the fixture corpus)."""
     from rws_data_ingester_spark.catalog import Catalog
-    from rws_data_ingester_spark.operators.cluster import (
-        connected_components,
-        connected_components_star,
-    )
     from rws_data_ingester_spark.operators.dedup import (
         lsh_star_edges,
         minhash_signature,
@@ -297,16 +242,19 @@ def test_star_cc_equals_propagation_on_corpus_lsh_edges(spark):
     sigs = minhash_signature(d.select("doc_id", "text"), "doc_id", "text")
     edges = lsh_star_edges(sigs, "doc_id")
     verts = d.select("doc_id")
-    a = _cc_sets(connected_components(edges, vertices=verts).collect())
-    b = _cc_sets(connected_components_star(edges, vertices=verts).collect())
-    assert a == b
+    fast = connected_components(edges, vertices=verts).collect()
+    dist = connected_components(edges, vertices=verts, driver_max_edges=-1).collect()
+    assert len(fast) == len(dist)
+    assert {r["id"]: r["component"] for r in fast} == {
+        r["id"]: r["component"] for r in dist
+    }
 
 
 def test_cc_driver_path_equals_distributed_path(spark):
     """The size-gated driver union-find (edges <= driver_max_edges, the
     broadcast-threshold analog added in round 5) must produce the
-    identical (id, component) labeling as the distributed min-label
-    propagation — pinned on random graphs, a duplicate-edge/self-dup mix,
+    identical (id, component) labeling as the distributed star
+    rounds — pinned on random graphs, a duplicate-edge/self-dup mix,
     and a chain. driver_max_edges=-1 forces the distributed path on the
     same input."""
     import random
@@ -363,13 +311,9 @@ def test_cc_mixed_endpoint_types_rejected_identically_on_both_paths(spark):
     ``assert`` (stripped under ``python -O``) inside the driver path
     only, so a mixed-type edge list raised on one side of the gate and
     silently coerced on the other — the same gate-dependent-divergence
-    class as the null-edge fix. Both gate settings and the star variant
-    must reject with the same error type."""
+    class as the null-edge fix. Both gate settings must reject with the
+    same error type."""
     import pytest
-
-    from rws_data_ingester_spark.operators.cluster import (
-        connected_components_star,
-    )
 
     edf = spark.createDataFrame(
         [(1, "2"), (2, "3")], "id_a long, id_b string"
@@ -377,8 +321,6 @@ def test_cc_mixed_endpoint_types_rejected_identically_on_both_paths(spark):
     for gate in (200_000, -1):
         with pytest.raises(TypeError, match="endpoint types must match"):
             connected_components(edf, driver_max_edges=gate)
-    with pytest.raises(TypeError, match="endpoint types must match"):
-        connected_components_star(edf)
 
 
 def test_cc_empty_edges_both_paths(spark):

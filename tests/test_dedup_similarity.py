@@ -332,9 +332,9 @@ def test_sql_double_literal_roundtrips_exactly(spark):
         assert struct.pack("d", a) == struct.pack("d", b), (x, a, b)
 
 
-def test_embedding_dup_ids_spreads_pair_scoring_below_gate(spark, monkeypatch):
+def test_embedding_dup_ids_spreads_pair_scoring_below_gate(spark):
     """r11 regression pin: in the broadcast-join regime (input below
-    $SPARK_GRAFT_PAIR_SPREAD_MAX_BYTES) the pair-scoring self-join must
+    spark.sql.autoBroadcastJoinThreshold) the pair-scoring self-join must
     spread its frame by the uniform synthetic key pmod(xxhash64(vec_id),
     64·N) — on few-file corpora the scan is one or few tasks and the
     O(Σ|block|²) scoring otherwise runs on one core (−52..57% noop A/B
@@ -342,7 +342,9 @@ def test_embedding_dup_ids_spreads_pair_scoring_below_gate(spark, monkeypatch):
     itself measured WORSE than plain at sf1 on the 16-cell blocking —
     hot cells pile onto few tasks). Above the gate the plain plan must
     come back: the sort-merge join plans its own block-key exchanges
-    there and AQE skew-splitting manages hot blocks."""
+    there and AQE skew-splitting manages hot blocks. The gate follows the
+    planner's threshold conf: disabling broadcast (-1) disables the
+    spread."""
     from rws_data_ingester_spark.operators.similarity import (
         _as_double,
         embedding_dup_ids,
@@ -357,6 +359,11 @@ def test_embedding_dup_ids_spreads_pair_scoring_below_gate(spark, monkeypatch):
     plan = embedding_dup_ids(v, ["label"])._jdf.queryExecution().toString()
     assert "xxhash64(vec_id" in plan and "REPARTITION_BY_NUM" in plan, plan[:2000]
 
-    monkeypatch.setenv("SPARK_GRAFT_PAIR_SPREAD_MAX_BYTES", "1")
-    plan_above = embedding_dup_ids(v, ["label"])._jdf.queryExecution().toString()
-    assert "REPARTITION_BY_NUM" not in plan_above, plan_above[:2000]
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "-1")
+        plan_off = embedding_dup_ids(v, ["label"])._jdf.queryExecution().toString()
+    finally:
+        spark.conf.set(key, saved)
+    assert "REPARTITION_BY_NUM" not in plan_off, plan_off[:2000]

@@ -59,72 +59,8 @@ def test_driver_check_window_is_the_curated_round3_set():
     )
 
 
-def test_round4_staged_window_is_well_formed():
-    """ROUND4_WINDOW is pre-staged (inactive until _ACTIVE_WINDOW flips):
-    50 registered names, no overlap with the round-3 window, and its
-    first 21 slots are queries with no driver row in r01∪r02 while the
-    re-proof tail re-checks round-1 greens on current code."""
-    import json
-    from pathlib import Path
-
-    from rws_data_ingester_spark.plans import REGISTRY, ROUND3_WINDOW, ROUND4_WINDOW
-
-    assert len(ROUND4_WINDOW) == 50
-    missing = [n for n in ROUND4_WINDOW if n not in REGISTRY]
-    assert not missing, missing
-    assert not set(ROUND4_WINDOW) & set(ROUND3_WINDOW)
-
-    repo = Path(__file__).resolve().parents[1]
-    seen: set[str] = set()
-    for rnd in ("CORRECTNESS_r01.json", "CORRECTNESS_r02.json"):
-        seen |= set(json.loads((repo / rnd).read_text()))
-    dark = [n for n in ROUND4_WINDOW[:21] if n in seen]
-    assert not dark, f"round-4 dark slots already checked: {dark}"
-    reproved = [n for n in ROUND4_WINDOW[21:] if n not in seen]
-    assert not reproved, f"round-4 re-proof slots never checked in r01: {reproved}"
 
 
-def test_round5_staged_window_is_well_formed():
-    """ROUND5_WINDOW is pre-staged (inactive until _ACTIVE_WINDOW flips
-    after CORRECTNESS_r04): 50 registered names, no overlap with the
-    round-4 window, its first 25 slots are queries with no driver row in
-    r01∪r02∪r03 (the final never-checked tier), and the re-proof tail
-    re-checks queries already green in an earlier round."""
-    import json
-    from pathlib import Path
-
-    from rws_data_ingester_spark.plans import REGISTRY, ROUND4_WINDOW, ROUND5_WINDOW
-
-    assert len(ROUND5_WINDOW) == 50
-    missing = [n for n in ROUND5_WINDOW if n not in REGISTRY]
-    assert not missing, missing
-    assert not set(ROUND5_WINDOW) & set(ROUND4_WINDOW)
-
-    repo = Path(__file__).resolve().parents[1]
-    seen: set[str] = set()
-    for rnd in ("CORRECTNESS_r01.json", "CORRECTNESS_r02.json", "CORRECTNESS_r03.json"):
-        seen |= set(json.loads((repo / rnd).read_text()))
-    dark = [n for n in ROUND5_WINDOW[:25] if n in seen]
-    assert not dark, f"round-5 dark slots already checked: {dark}"
-    reproved = [n for n in ROUND5_WINDOW[25:] if n not in seen]
-    assert not reproved, f"round-5 re-proof slots never checked before: {reproved}"
-
-
-def test_round3_window_targets_only_driver_dark_queries():
-    """Every slot in the round-3 window is spent on a query with no green
-    driver row in CORRECTNESS_r01/r02 — the window exists to close the
-    verification gap, not to re-prove what is already proven."""
-    import json
-    from pathlib import Path
-
-    from rws_data_ingester_spark.plans import ROUND3_WINDOW
-
-    repo = Path(__file__).resolve().parents[1]
-    seen: set[str] = set()
-    for rnd in ("CORRECTNESS_r01.json", "CORRECTNESS_r02.json"):
-        seen |= set(json.loads((repo / rnd).read_text()))
-    already = [n for n in ROUND3_WINDOW if n in seen]
-    assert not already, f"window slots wasted on already-checked queries: {already}"
 
 
 def test_cogroup_attribution_survives_bare_count(spark):
@@ -181,28 +117,14 @@ def test_driver_evidence_ledger_covers_every_registered_query():
     alone covers the registry; until then the active window is the
     in-flight evidence. A query that is neither recorded nor scheduled
     is invisible coverage — exactly the gap rounds 3-5 existed to close.
-
-    A query registered AFTER the active window froze cannot hold a slot
-    this round; its slot in the staged next window is the scheduled
-    evidence (mirrors the stall gate's first-proof rule)."""
+    A newly registered query needs a slot in the active window."""
     import json
     from pathlib import Path
 
-    import rws_data_ingester_spark.plans as plans
     from rws_data_ingester_spark.plans import _ACTIVE_WINDOW
 
     repo = Path(__file__).resolve().parents[1]
     seen: set[str] = set(_ACTIVE_WINDOW)
-    # windows staged STRICTLY AFTER the active one (future rounds) carry
-    # scheduled first-proof slots; past windows stay excluded so a query
-    # that errored in an old window still reads as dark until re-proven
-    active_round = max(
-        i
-        for i in range(1, 50)
-        if getattr(plans, f"ROUND{i}_WINDOW", None) is _ACTIVE_WINDOW
-    )
-    for i in range(active_round + 1, 50):
-        seen |= set(getattr(plans, f"ROUND{i}_WINDOW", ()))
     for path in sorted(repo.glob("CORRECTNESS_r*.json")):
         recorded = json.loads(path.read_text())
         # count rows that ran clean: oracle-paired greens (err null) and
@@ -218,13 +140,10 @@ def test_driver_evidence_ledger_covers_every_registered_query():
     assert not dark, f"queries with no driver row and no scheduled slot: {dark}"
 
 
-def _latest_driver_round(repo, through_round: int | None = None) -> dict[str, int]:
+def _latest_driver_round(repo) -> dict[str, int]:
     """Each query's latest CLEAN driver round from ∪CORRECTNESS_r*.json
     (oracle-paired green, or rows-only that executed with a real row
-    count). ``through_round`` caps the files considered — staged-window
-    pins use the evidence that existed AT STAGING TIME, so a later
-    round's artifact can't retroactively fail a historical pin. The glob
-    and the round parse must both survive round 10+ (a 'r0*' glob would
+    count). The glob and the round parse must both survive round 10+ (a 'r0*' glob would
     freeze the freshness gate exactly when the build reaches two-digit
     rounds)."""
     import json
@@ -236,15 +155,13 @@ def _latest_driver_round(repo, through_round: int | None = None) -> dict[str, in
         if m is None:
             # e.g. a stray CORRECTNESS_r06_backup.json matches the glob
             # but not the round parse — name the offender instead of
-            # crashing every window test with a bare AttributeError
+            # crashing the freshness gate with a bare AttributeError
             # (round-6 ADVICE).
             raise AssertionError(
                 f"file matches CORRECTNESS_r*.json but not the round "
                 f"pattern _r<digits>: {path.name}"
             )
         rnd = int(m.group(1))
-        if through_round is not None and rnd > through_round:
-            continue
         for n, v in json.loads(path.read_text()).items():
             clean = (not v.get("err")) or (
                 v["err"] == "no_oracle" and v.get("spark_rows") is not None
@@ -252,186 +169,6 @@ def _latest_driver_round(repo, through_round: int | None = None) -> dict[str, in
             if clean:
                 latest[n] = max(latest.get(n, 0), rnd)
     return latest
-
-
-def test_round6_staged_window_is_well_formed():
-    """ROUND6_WINDOW (active in round 6, staged after CORRECTNESS_r05):
-    50 registered names, and — since 194/194 coverage was reached when r5
-    landed — every slot either re-proves a query whose LATEST driver row
-    at staging time (through r05) was the round-2/3 vintage (evidence
-    freshness, oldest first) or first-proves an oracle newly paired in
-    round 6 (rows-only → DuckDB-paired, so the ORACLE has never been
-    driver-checked even though the query ran rows-only in r5)."""
-    from pathlib import Path
-
-    from rws_data_ingester_spark.plans import REGISTRY, ROUND5_WINDOW, ROUND6_WINDOW
-
-    newly_paired_r6 = {
-        "sink_compaction",
-        "source_schema_evolution",
-        "source_json_corrupt_records",
-        "pipeline_pack_sequences",
-    }
-
-    assert len(ROUND6_WINDOW) == 50
-    missing = [n for n in ROUND6_WINDOW if n not in REGISTRY]
-    assert not missing, missing
-    assert set(ROUND6_WINDOW) & set(ROUND5_WINDOW) == newly_paired_r6
-    # the newly-paired slots must actually carry an oracle now
-    unpaired = [n for n in newly_paired_r6 if REGISTRY[n].oracle is None]
-    assert not unpaired, f"claimed newly-paired but oracle-less: {unpaired}"
-
-    repo = Path(__file__).resolve().parents[1]
-    latest = _latest_driver_round(repo, through_round=5)
-    stale = [
-        n
-        for n in ROUND6_WINDOW
-        if n not in newly_paired_r6 and latest.get(n, 0) > 3
-    ]
-    assert not stale, f"round-6 slots wasted on fresh evidence: {stale}"
-
-
-def test_round7_staged_window_is_well_formed():
-    """ROUND7_WINDOW (active in round 7, staged after CORRECTNESS_r06):
-    50 registered names, no overlap with the round-6 window, and every
-    slot either continues the freshness rotation — at staging time
-    (evidence through r05) each slot's latest driver row is round-3/4
-    vintage — or first-proves an oracle newly paired in round 7
-    (rows-only → DuckDB-paired, so the ORACLE has never been
-    driver-checked even though the query ran rows-only in r5)."""
-    from pathlib import Path
-
-    from rws_data_ingester_spark.plans import REGISTRY, ROUND6_WINDOW, ROUND7_WINDOW
-
-    newly_paired_r7 = {"sink_zorder_pruning"}
-
-    assert len(ROUND7_WINDOW) == 50
-    missing = [n for n in ROUND7_WINDOW if n not in REGISTRY]
-    assert not missing, missing
-    assert not set(ROUND7_WINDOW) & set(ROUND6_WINDOW)
-    # the newly-paired slot must actually carry an oracle now
-    unpaired = [n for n in newly_paired_r7 if REGISTRY[n].oracle is None]
-    assert not unpaired, f"claimed newly-paired but oracle-less: {unpaired}"
-
-    repo = Path(__file__).resolve().parents[1]
-    latest = _latest_driver_round(repo, through_round=5)
-    stale = [
-        n
-        for n in ROUND7_WINDOW
-        if n not in newly_paired_r7 and latest.get(n, 0) > 4
-    ]
-    assert not stale, f"round-7 slots wasted on fresh evidence: {stale}"
-    never = [n for n in ROUND7_WINDOW if latest.get(n, 0) == 0]
-    assert not never, f"round-7 slots on never-evidenced queries (use a dark-tier window): {never}"
-
-
-def test_round8_staged_window_is_well_formed():
-    """ROUND8_WINDOW is pre-staged (inactive until _ACTIVE_WINDOW flips
-    after CORRECTNESS_r07): 50 registered names, no overlap with the
-    round-7 window, and every slot continues the freshness rotation —
-    at staging time (evidence through r06) each slot's latest driver row
-    is round-4/5 vintage, i.e. the oldest evidence remaining once the
-    round-7 window re-proves the round-3 tier."""
-    from pathlib import Path
-
-    from rws_data_ingester_spark.plans import REGISTRY, ROUND7_WINDOW, ROUND8_WINDOW
-
-    assert len(ROUND8_WINDOW) == 50
-    missing = [n for n in ROUND8_WINDOW if n not in REGISTRY]
-    assert not missing, missing
-    assert not set(ROUND8_WINDOW) & set(ROUND7_WINDOW)
-
-    repo = Path(__file__).resolve().parents[1]
-    latest = _latest_driver_round(repo, through_round=6)
-    stale = [n for n in ROUND8_WINDOW if latest.get(n, 0) > 5]
-    assert not stale, f"round-8 slots wasted on fresh evidence: {stale}"
-    never = [n for n in ROUND8_WINDOW if latest.get(n, 0) == 0]
-    assert not never, f"round-8 slots on never-evidenced queries (use a dark-tier window): {never}"
-
-
-def test_round9_staged_window_is_well_formed():
-    """ROUND9_WINDOW is pre-staged (inactive until _ACTIVE_WINDOW flips
-    after CORRECTNESS_r08): 50 registered names, no overlap with the
-    round-8 window, and every slot continues the freshness rotation —
-    at staging time (evidence through r07) each slot's latest driver row
-    is round-5/6 vintage, i.e. the oldest evidence remaining once the
-    round-8 window re-proves the round-4 tier."""
-    from pathlib import Path
-
-    from rws_data_ingester_spark.plans import REGISTRY, ROUND8_WINDOW, ROUND9_WINDOW
-
-    assert len(ROUND9_WINDOW) == 50
-    missing = [n for n in ROUND9_WINDOW if n not in REGISTRY]
-    assert not missing, missing
-    assert not set(ROUND9_WINDOW) & set(ROUND8_WINDOW)
-
-    repo = Path(__file__).resolve().parents[1]
-    latest = _latest_driver_round(repo, through_round=7)
-    stale = [n for n in ROUND9_WINDOW if latest.get(n, 0) > 6]
-    assert not stale, f"round-9 slots wasted on fresh evidence: {stale}"
-    never = [n for n in ROUND9_WINDOW if latest.get(n, 0) == 0]
-    assert not never, f"round-9 slots on never-evidenced queries (use a dark-tier window): {never}"
-
-
-def test_round10_staged_window_is_well_formed():
-    """ROUND10_WINDOW is pre-staged (inactive until _ACTIVE_WINDOW flips
-    after CORRECTNESS_r09): 50 registered names, no overlap with the
-    round-9 window, and every slot continues the freshness rotation —
-    at staging time (evidence through r08) each slot's latest driver row
-    is round-6/7 vintage, i.e. the oldest evidence remaining once the
-    round-9 window re-proves the round-5 tier. sink_zorder_pruning is
-    pulled forward deliberately (VERDICT r8 task 5): the r8 layout.py
-    fan-out change postdates its last driver check."""
-    from pathlib import Path
-
-    from rws_data_ingester_spark.plans import REGISTRY, ROUND9_WINDOW, ROUND10_WINDOW
-
-    assert len(ROUND10_WINDOW) == 50
-    missing = [n for n in ROUND10_WINDOW if n not in REGISTRY]
-    assert not missing, missing
-    assert not set(ROUND10_WINDOW) & set(ROUND9_WINDOW)
-    assert "sink_zorder_pruning" in ROUND10_WINDOW
-
-    repo = Path(__file__).resolve().parents[1]
-    latest = _latest_driver_round(repo, through_round=8)
-    stale = [n for n in ROUND10_WINDOW if latest.get(n, 0) > 7]
-    assert not stale, f"round-10 slots wasted on fresh evidence: {stale}"
-    never = [n for n in ROUND10_WINDOW if latest.get(n, 0) == 0]
-    assert not never, f"round-10 slots on never-evidenced queries (use a dark-tier window): {never}"
-
-
-def test_round11_staged_window_is_well_formed():
-    """ROUND11_WINDOW is pre-staged (inactive until _ACTIVE_WINDOW flips
-    after CORRECTNESS_r10): 50 registered names, no overlap with the
-    round-10 window, and every slot continues the freshness rotation —
-    at staging time (evidence through r09) each slot's latest driver row
-    is round-7/8 vintage, the oldest evidence remaining once the
-    round-10 window re-proves the round-6 tier. Two DELIBERATE
-    first-proof slots carry no prior evidence: `join_salted_adaptive`
-    and `session_window_sharded` were registered in round 10 (r9 VERDICT
-    tasks 2 and 4) and take their first driver row here."""
-    from pathlib import Path
-
-    from rws_data_ingester_spark.plans import REGISTRY, ROUND10_WINDOW, ROUND11_WINDOW
-
-    FIRST_PROOF = {"join_salted_adaptive", "session_window_sharded"}
-
-    assert len(ROUND11_WINDOW) == 50
-    missing = [n for n in ROUND11_WINDOW if n not in REGISTRY]
-    assert not missing, missing
-    assert not set(ROUND11_WINDOW) & set(ROUND10_WINDOW)
-    assert FIRST_PROOF <= set(ROUND11_WINDOW)
-
-    repo = Path(__file__).resolve().parents[1]
-    latest = _latest_driver_round(repo, through_round=9)
-    stale = [n for n in ROUND11_WINDOW if latest.get(n, 0) > 8]
-    assert not stale, f"round-11 slots wasted on fresh evidence: {stale}"
-    never = [
-        n
-        for n in ROUND11_WINDOW
-        if latest.get(n, 0) == 0 and n not in FIRST_PROOF
-    ]
-    assert not never, f"round-11 slots on never-evidenced queries (use a dark-tier window): {never}"
 
 
 def test_evidence_freshness_rotation_cannot_stall():
@@ -443,12 +180,10 @@ def test_evidence_freshness_rotation_cannot_stall():
     this fails before the ledger silently rots.
 
     A query registered mid-rotation has latest=0 until its first driver
-    row; it is not a stall as long as it holds a slot in THIS round's
-    window or the staged NEXT window (the earliest slot a query added
-    after the current window froze can occupy)."""
+    row; it is not a stall as long as it holds a slot in the active
+    window."""
     from pathlib import Path
 
-    import rws_data_ingester_spark.plans as plans
     from rws_data_ingester_spark.plans import REGISTRY, _ACTIVE_WINDOW
 
     GRACE_ROUNDS = 4
@@ -456,11 +191,7 @@ def test_evidence_freshness_rotation_cannot_stall():
     repo = Path(__file__).resolve().parents[1]
     latest = _latest_driver_round(repo)
     current_round = max(latest.values(), default=0) + 1
-    active = set(_ACTIVE_WINDOW)
-    staged_next = set(
-        getattr(plans, f"ROUND{current_round + 1}_WINDOW", ())
-    )
-    scheduled = active | {n for n in staged_next if latest.get(n, 0) == 0}
+    scheduled = set(_ACTIVE_WINDOW)
     stale = sorted(
         n
         for n in REGISTRY

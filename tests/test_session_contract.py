@@ -71,12 +71,37 @@ def test_load_table_serves_cached_handle_per_session(spark):
     a = load_table(spark, SF_DIR, "nation")
     b = load_table(spark, SF_DIR, "nation")
     assert a is b, "same session + same path must serve the cached handle"
-    # the cache is keyed on the live session object and holds plan
-    # handles only — clearing it must be invisible to results
-    cat._DF_CACHE.clear()
+    # the cache lives on the session object and holds plan handles
+    # only — clearing it must be invisible to results
+    vars(spark)[cat._HANDLES_ATTR].clear()
     c = load_table(spark, SF_DIR, "nation")
     assert c is not a
     cols = a.columns
     assert rows_to_multiset(cols, [tuple(r) for r in a.collect()]) == rows_to_multiset(
         cols, [tuple(r) for r in c.collect()]
     )
+
+
+def test_table_handle_cache_is_freed_with_its_session(spark):
+    """The handle cache must not outlive its session. Each cached
+    DataFrame references the session that made it, so a cache keyed on
+    the session in a module-level WeakKeyDictionary never evicted: the
+    value kept its own key alive. Sessions that load a table and are then
+    dropped must be garbage-collectable."""
+    import gc
+    import weakref
+
+    from pyspark.sql.session import _monkey_patch_RDD
+
+    refs = []
+    for _ in range(5):
+        s = spark.newSession()
+        assert load_table(s, SF_DIR, "nation") is load_table(s, SF_DIR, "nation")
+        refs.append(weakref.ref(s))
+    del s
+    # Every SparkSession() binds RDD.toDF to itself, which would keep the
+    # newest session alive; hand that binding back to the shared session.
+    _monkey_patch_RDD(spark)
+    gc.collect()
+    alive = sum(r() is not None for r in refs)
+    assert alive == 0, f"{alive} of 5 dropped sessions still alive"

@@ -514,22 +514,23 @@ def test_sharded_sessionization_merges_midnight_chain(spark):
 
 def test_session_islands_dispatches_to_sharded_above_size_gate(spark, monkeypatch):
     """r10 VERDICT item 4: session_window_islands is size-gated — above
-    $SPARK_GRAFT_SESSION_SHARD_MIN_BYTES it must return the row-identical
+    temporal._SESSION_SHARD_MIN_BYTES it must return the row-identical
     (user_id, day)-sharded plan (phase-1 shuffle key includes the day),
     below it the plain one-shuffle islands plan (the sharded form
     measured +72% at sf0.1, pure overhead without a hot user)."""
+    from rws_data_ingester_spark.operators import temporal
     from rws_data_ingester_spark.operators.temporal import (
         session_window_islands,
         session_window_sharded,
     )
 
-    monkeypatch.setenv("SPARK_GRAFT_SESSION_SHARD_MIN_BYTES", "0")
+    monkeypatch.setattr(temporal, "_SESSION_SHARD_MIN_BYTES", 0)
     gated = session_window_islands(spark, SF_DIR)
     assert "_day" in gated._jdf.queryExecution().analyzed().toString()
     assert sorted(map(tuple, gated.collect())) == sorted(
         map(tuple, session_window_sharded(spark, SF_DIR).collect())
     )
 
-    monkeypatch.setenv("SPARK_GRAFT_SESSION_SHARD_MIN_BYTES", str(1 << 60))
+    monkeypatch.setattr(temporal, "_SESSION_SHARD_MIN_BYTES", 1 << 60)
     plain = session_window_islands(spark, SF_DIR)
     assert "_day" not in plain._jdf.queryExecution().analyzed().toString()
