@@ -95,44 +95,21 @@ def jaccard_score_pairs(pairs: DataFrame, docs: DataFrame, threshold: float = 0.
     )
 
 
-def jaccard_pairs_exact(docs: DataFrame, threshold: float = 0.1) -> DataFrame:
-    """All-pairs exact Jaccard within a `source` block — the O(n²/b) twin
-    kept for tests: the LSH-routed registered query below is asserted to
-    recover its high-similarity pairs (same contract as the simsearch
-    np/Catalyst pair). Not registered: product near-dup detection must not
-    materialize a quadratic pair space outside an LSH bucket."""
-    toks = docs.select(
-        "doc_id", "source", F.array_distinct(F.split("text", " ")).alias("tokset")
-    )
-    a, b = toks.alias("a"), toks.alias("b")
-    inter = F.size(F.array_intersect(F.col("a.tokset"), F.col("b.tokset")))
-    union = F.size(F.col("a.tokset")) + F.size(F.col("b.tokset")) - inter
-    return (
-        a.join(
-            b,
-            (F.col("a.source") == F.col("b.source")) & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        # raw score bound once; pround over the bound column (4 operand
-        # references would re-intersect the token sets per reference)
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            (inter.cast("double") / union).alias("_raw_jac"),
-        )
-        .select("doc_a", "doc_b", pround("_raw_jac", 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
 @query("dedup_jaccard_pairs", oracle=None)  # candidate set is minhash-dependent → rows-only
 def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact n-gram Jaccard computed ONLY on MinHash/LSH candidate pairs —
-    the scale-true form: candidate generation shuffles (band_id, band_hash)
-    buckets, never an O(n²) block product, and the exact scoring pass is
-    linear in the candidate count. With 16 hashes / 4 bands the s-curve
-    P(candidate) = 1-(1-s⁴)⁴ keeps recall ≈1.0 for true duplicates
-    (s=1 ⇒ P=1; s=0.9 ⇒ P≈0.99). tests/test_dedup_similarity.py pins the
-    output against the all-pairs exact twin (jaccard_pairs_exact)."""
+    """Exact token-set Jaccard computed ONLY on MinHash/LSH candidate
+    pairs — the scale-true form: candidate generation shuffles (band_id,
+    band_hash) buckets, never an O(n²) block product, and the scoring pass
+    is linear in the candidate count. With 16 hashes / 4 bands the
+    s-curve P(candidate) = 1-(1-s⁴)⁴ is ≈1 at s ≥ 0.9, but s here is the
+    Jaccard of word 3-SHINGLE sets while the reported score is the
+    Jaccard of TOKEN sets — two different similarities. Reordered or
+    lightly edited text shares most tokens and few shingles, so high
+    token-Jaccard pairs are mostly never candidates: on the fixtures this
+    recovers 2 of 516 (sf0.001) and 1 of 447 (sf0.01) same-source pairs
+    with token-set Jaccard ≥ 0.9, and 0 of 17 at Jaccard 1.0. Where a pair
+    is returned, its score equals the all-pairs token-set Jaccard
+    exactly. No test pins recall."""
     d = Catalog(spark, sf_dir).documents
     sigs = minhash_signature(d.select("doc_id", "text"), "doc_id", "text")
     cands = lsh_candidate_pairs(sigs, "doc_id")
@@ -142,8 +119,10 @@ def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # MinHash + LSH banding (pure DataFrame ops — no MLlib, no Python UDF)
 # --------------------------------------------------------------------------
-def shingles(text_col: F.Column, k: int = 3) -> F.Column:
-    """Word k-shingles as an array column (distinct).
+def _shingles_sql(text_col: str, k: int) -> str:
+    """Word k-shingles of column ``text_col`` as SQL text: an array of
+    distinct strings. The column name is backtick-escaped here, so any
+    column name is safe.
 
     The token array is materialized ONCE via a lambda binding
     (`transform` over a single-element wrapper) so the per-shingle
@@ -151,55 +130,33 @@ def shingles(text_col: F.Column, k: int = 3) -> F.Column:
     inside the position lambda re-splits the text per shingle, turning
     an O(tokens) op into O(tokens²) per document.
 
-    Each shingle is assembled with ``concat(element_at(t, i), ' ', …)``
-    rather than ``concat_ws(' ', slice(t, i, k))``: the slice form
+    Each shingle is assembled with ``concat(element_at(toks, i), ' ', …)``
+    rather than ``concat_ws(' ', slice(toks, i, k))``: the slice form
     allocates a k-element array per position before joining it, and the
     element_at form was measured 2× faster at k=3 on the sf0.1 corpus
     (0.52 s → 0.26 s noop median) for byte-identical output. Short rows
     (< k tokens) keep the historical semantics — ONE shingle of the
     whole token array — via an explicit branch (element_at under ANSI
-    errors past the end, and the old slice form clamped)."""
-    full_row = lambda toks: F.array(F.concat_ws(" ", toks))  # noqa: E731
-    return F.array_distinct(
-        F.flatten(
-            F.transform(
-                F.array(F.split(text_col, " ")),
-                lambda toks: F.when(
-                    F.size(toks) >= k,
-                    F.transform(
-                        F.sequence(F.lit(0), F.size(toks) - k),
-                        lambda i: F.concat(
-                            *sum(
-                                ([F.element_at(toks, i + j), F.lit(" ")] for j in range(1, k)),
-                                [],
-                            ),
-                            F.element_at(toks, i + k),
-                        ),
-                    ),
-                ).otherwise(full_row(toks)),
-            )
-        )
-    )
-
-
-def _shingles_sql(tcol_sql: str, k: int) -> str:
-    """SQL-text rendering of ``shingles()`` (same element_at+concat gram
-    assembly, same short-row whole-array branch). INTERNAL CALLERS ONLY:
-    ``tcol_sql`` is interpolated into SQL text — callers must pass an
-    already-backtick-escaped internal column name, never external input.
-    Kept as one function so the parsed form and the exported Column form
-    cannot silently diverge (equivalence pinned by
-    tests/test_dedup_similarity.py::test_minhash_sql_shingles_match_shingles)."""
+    errors past the end, and the old slice form clamped). Output on a
+    torture corpus is pinned by
+    tests/test_dedup_similarity.py::test_minhash_sql_shingles_match_shingles."""
+    tcol = text_col.replace("`", "``")
     gram = "concat(" + ", ' ', ".join(
         f"element_at(toks, i + {j})" for j in range(1, k + 1)
     ) + ")"
     return (
         "array_distinct(flatten(transform("
-        f"array(split(`{tcol_sql}`, ' ')), "
+        f"array(split(`{tcol}`, ' ')), "
         f"toks -> CASE WHEN size(toks) >= {k} "
         f"THEN transform(sequence(0, size(toks) - {k}), i -> {gram}) "
         "ELSE array(concat_ws(' ', toks)) END)))"
     )
+
+
+def shingles(text_col: str, k: int = 3) -> F.Column:
+    """Word k-shingles of column ``text_col`` as an array column (distinct)
+    — see ``_shingles_sql``."""
+    return F.expr(_shingles_sql(text_col, k))
 
 
 def minhash_signature(df: DataFrame, id_col: str, text_col: str, num_hashes: int = 16, k: int = 3) -> DataFrame:
@@ -242,14 +199,8 @@ def minhash_signature(df: DataFrame, id_col: str, text_col: str, num_hashes: int
     coeffs = [
         (rng.randrange(1, _P), rng.randrange(0, _P)) for _ in range(num_hashes)
     ]
-    # SQL-text twin of shingles() — single source of truth in
-    # _shingles_sql below, pinned equal to the exported shingles() by
-    # tests/test_dedup_similarity.py::test_minhash_sql_shingles_match_shingles
-    # (r10 ADVICE: a future edit to shingles() must not silently diverge
-    # from this signature path).
-    tcol = text_col.replace("`", "``")
     shingle_hashes = (
-        f"transform({_shingles_sql(tcol, k)}, "
+        f"transform({_shingles_sql(text_col, k)}, "
         f"s -> pmod(xxhash64(s), {_P}L))"
     )
     mins = ", ".join(
@@ -285,7 +236,6 @@ def lsh_candidate_pairs(
     num_hashes: int = 16,
     bands: int = 4,
     max_bucket_size: int = 10_000,
-    on_oversize: str = "error",
 ) -> DataFrame:
     """Band the signature and bucket-join: docs agreeing on any full band
     become candidate pairs. Shuffle key = (band_id, band_hash) — only
@@ -303,22 +253,14 @@ def lsh_candidate_pairs(
     join. The size is a window count over the (band_id, band_hash)
     partition the banding is ALREADY repartitioned on — no extra
     shuffle, no extra job, and the guard fires in the banding stage
-    BEFORE any quadratic output exists. ``on_oversize``:
-
-    - ``"error"`` (default): ``raise_error`` with the bucket id and size
-      — per-pair scoring over a mega-bucket is almost always a symptom
-      (an empty-shingle band, templated boilerplate) that the caller
-      should see, not silently absorb;
-    - ``"star"``: oversized buckets contribute STAR edges (member ↔
-      bucket-min) instead of clique pairs — linear in bucket size, the
-      same connectivity (CC over the result is identical, equivalence-
-      tested), but NOT score-complete: pairs inside an oversized bucket
-      that share no small bucket won't be individually scored. Right
-      when the pairs feed connected components; wrong when every pair's
-      Jaccard matters.
+    BEFORE any quadratic output exists. An oversized bucket fails the
+    query with ``raise_error`` naming the bucket id and size: per-pair
+    scoring over a mega-bucket is almost always a symptom (an
+    empty-shingle band, templated boilerplate) that the caller should
+    see, not silently absorb. Callers that only need connectivity feed
+    connected components from ``lsh_star_edges`` instead, which is
+    linear in bucket size.
     """
-    if on_oversize not in {"error", "star"}:
-        raise ValueError(f"on_oversize must be 'error' or 'star', got {on_oversize!r}")
     banded = _banded(sigs, id_col, num_hashes, bands)
     # One explicit exchange on the join key: both sides of the self-join
     # below hit the SAME shuffle output (ReusedExchange) — the signature
@@ -335,29 +277,27 @@ def lsh_candidate_pairs(
     banded = banded.withColumn(
         "_bucket_n", F.count(F.lit(1)).over(W.partitionBy("band_id", "band_hash"))
     )
-    if on_oversize == "error":
-        banded = banded.withColumn(
-            "_bucket_n",
-            F.when(
-                F.col("_bucket_n") > max_bucket_size,
-                F.raise_error(
-                    F.format_string(
-                        "lsh_candidate_pairs: bucket (band_id=%s, band_hash=%s) "
-                        "has %s members > max_bucket_size="
-                        + str(max_bucket_size)
-                        + " — clique pairs would be quadratic; raise "
-                        "max_bucket_size, pass on_oversize='star', or feed "
-                        "CC lsh_star_edges instead",
-                        F.col("band_id"),
-                        F.col("band_hash"),
-                        F.col("_bucket_n"),
-                    )
-                ).cast("long"),
-            ).otherwise(F.col("_bucket_n")),
-        )
+    banded = banded.withColumn(
+        "_bucket_n",
+        F.when(
+            F.col("_bucket_n") > max_bucket_size,
+            F.raise_error(
+                F.format_string(
+                    "lsh_candidate_pairs: bucket (band_id=%s, band_hash=%s) "
+                    "has %s members > max_bucket_size="
+                    + str(max_bucket_size)
+                    + " — clique pairs would be quadratic; raise "
+                    "max_bucket_size, or feed CC lsh_star_edges instead",
+                    F.col("band_id"),
+                    F.col("band_hash"),
+                    F.col("_bucket_n"),
+                )
+            ).cast("long"),
+        ).otherwise(F.col("_bucket_n")),
+    )
     small = banded.filter(F.col("_bucket_n") <= max_bucket_size)
     a, b = small.alias("a"), small.alias("b")
-    pairs = (
+    return (
         a.join(
             b.hint("shuffle_hash"),
             (F.col("a.band_id") == F.col("b.band_id"))
@@ -365,16 +305,8 @@ def lsh_candidate_pairs(
             & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
         )
         .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        .distinct()
     )
-    if on_oversize == "star":
-        big = banded.filter(F.col("_bucket_n") > max_bucket_size)
-        root = F.min(id_col).over(W.partitionBy("band_id", "band_hash"))
-        star = (
-            big.select(root.alias("id_a"), F.col(id_col).alias("id_b"))
-            .filter(F.col("id_a") != F.col("id_b"))
-        )
-        pairs = pairs.unionByName(star)
-    return pairs.distinct()
 
 
 def lsh_star_edges(
@@ -393,9 +325,10 @@ def lsh_star_edges(
     one exchange on (band_id, band_hash) — rows are 3 longs — then a
     per-bucket window min computes each member's root on the sorted
     partition with no second shuffle. Diameter grows from 1 to 2 per
-    bucket (member→root→member),
-    which costs min-label propagation at most one extra round — rounds are
-    cheap, quadratic edges are not."""
+    bucket (member→root→member), which neither connected-components
+    branch pays for by the round: union-find below the driver gate is
+    diameter-blind, and large-star/small-star above it needs O(log n)
+    rounds on any graph shape. Quadratic edges would cost far more."""
     banded = _banded(sigs, id_col, num_hashes, bands).repartition(
         "band_id", "band_hash"
     )
@@ -512,39 +445,25 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     stands in for the IVF/LSH bucket a production run would use — the
     crossJoin never leaves a block."""
     from rws_data_ingester_spark.operators.similarity import (
-        _spread_pair_frame,
+        _as_double,
+        _block_pairs,
         scorable,
     )
 
     e = Catalog(spark, sf_dir).embeddings
     # Unscorable embeddings (NULL / NaN / Inf) never form pairs on either
-    # engine — see similarity.scorable() and its oracle twin above.
-    # Norm folded once per row before the self-join (bit-identical hoist,
-    # see similarity.embedding_dup_ids — two of the three per-pair HOF
-    # folds removed).
-    v = scorable(e).select(
-        "vec_id", "label", F.expr("transform(embedding, x -> cast(x as double))").alias("e")
-    ).withColumn(
-        "_nrm",
-        F.sqrt(F.expr("aggregate(zip_with(e, e, (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)")),
-    )
-    # spread the O(Σ|label-block|²) pair scoring across the cluster in
-    # the broadcast regime — see similarity._spread_pair_frame (r11).
-    # The final per-label AVG re-aggregates after its own exchange, and
-    # the rounded avg_sim was verified by sorted collect + oracle at
-    # sf0.001/0.01/0.1.
-    v = _spread_pair_frame(v)
-    a, b = v.alias("a"), v.alias("b")
-    dot = F.expr("aggregate(zip_with(a.e, b.e, (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)")
-    pairs = a.join(
-        b, (F.col("a.label") == F.col("b.label")) & (F.col("a.vec_id") < F.col("b.vec_id"))
-    ).select(
-        F.col("a.label").alias("label"),
-        (dot / F.nullif(F.col("a._nrm") * F.col("b._nrm"), F.lit(0.0))).alias("sim"),
-    )
-    return pairs.groupBy("label").agg(
-        F.count(F.when(F.col("sim") >= 0.9, 1)).alias("n_neardups"),
-        (pround(F.avg("sim"), 4) + 0.0).alias("avg_sim"),  # +0.0: -0.0 normalization
+    # engine — see similarity.scorable() and its oracle twin above. The
+    # blocked self-join and its cosine are embedding_dup_ids' own (see
+    # similarity._block_pairs); only the per-label aggregate is ours.
+    v = scorable(e).select("vec_id", "label", _as_double("embedding").alias("e"))
+    pairs, sim = _block_pairs(v, ["label"])
+    return (
+        pairs.select(F.col("a.label").alias("label"), sim.alias("sim"))
+        .groupBy("label")
+        .agg(
+            F.count(F.when(F.col("sim") >= 0.9, 1)).alias("n_neardups"),
+            (pround(F.avg("sim"), 4) + 0.0).alias("avg_sim"),  # +0.0: -0.0 normalization
+        )
     )
 
 

@@ -234,6 +234,7 @@ def pipeline_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         _as_double,
         _cell_expr,
         _ivf_fit,
+        _label_keep_counts,
         embedding_dup_ids,
         scorable,
     )
@@ -248,14 +249,7 @@ def pipeline_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = scorable(e).select(
         "vec_id", "label", _as_double("embedding").alias("e")
     ).select("vec_id", "label", "e", cell.alias("centroid_id"))
-    dup_ids = embedding_dup_ids(v, ["centroid_id"], threshold=0.9)
-    flagged = e.select("vec_id", "label").join(
-        dup_ids.withColumn("is_dup", F.lit(1)), "vec_id", "left"
-    )
-    return flagged.groupBy("label").agg(
-        F.count(F.when(F.col("is_dup").isNull(), 1)).alias("n_kept"),
-        F.count(F.when(F.col("is_dup").isNotNull(), 1)).alias("n_dropped"),
-    )
+    return _label_keep_counts(e, embedding_dup_ids(v, ["centroid_id"], threshold=0.9))
 
 
 @query("pipeline_quality_classifier", oracle=None)  # trained-model scores → rows-only

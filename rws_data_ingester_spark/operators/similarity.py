@@ -1,14 +1,20 @@
 """Similarity search over embedding columns (SURVEY.md §2.10 [EXT]).
 
-Two paths behind one semantic contract (top-k cosine neighbors):
-- exact brute force — oracle-checkable, fine up to ~10⁶×10³ pairs, used
-  when the query set is small (broadcast queries against the corpus, so
-  the corpus never shuffles);
-- LSH (random-hyperplane signatures) — the 100 TB path: corpus is
-  bucketed once by signature prefix, probes only touch matching buckets.
+Five tiers behind one semantic contract (top-k cosine neighbors):
+- exact Catalyst brute force (``cosine_topk``) — oracle-checkable, fine
+  up to ~10⁶×10³ pairs: the small query side is broadcast against the
+  corpus, so the corpus never shuffles;
+- exact numpy (``cosine_topk_np``) — same contract, one BLAS matmul per
+  Arrow batch of the corpus;
+- LSH (banded random-hyperplane signatures) — corpus rows meet a query
+  only inside a shared band bucket;
+- IVF (k-means coarse quantizer) — a query probes its nearest cells only;
+- PQ (product-quantization ADC shortlist, ``vectors.simsearch_topk_pq``).
 
-Both compute cosines in float64 after an explicit cast from the float32
-storage type so results are engine-comparable.
+Each approximate tier is a candidate generator followed by the same
+exact cosine re-rank (``_cosine_scored`` + ``_top_k``). All cosines are
+computed in float64 after an explicit cast from the float32 storage type
+so results are engine-comparable.
 """
 
 from __future__ import annotations
@@ -111,50 +117,64 @@ def scorable(df: DataFrame, dim: int | None = None) -> DataFrame:
     return df.filter(F.expr(f"{_FINITE_PRED} AND size(embedding) = {int(d)}"))
 
 
+def _normed(df: DataFrame, id_name: str, e_name: str, n_name: str, **extra: F.Column) -> DataFrame:
+    """One side of a cosine join: (id, float64 vector, *extra, norm).
+
+    The norm is folded ONCE PER ROW before the join (O(n) folds), not per
+    scored pair (O(n·q) folds): the per-pair form re-ran two of the three
+    zip_with/aggregate chains for every combination — hoisting them is
+    bit-identical (same IEEE ops, same order, evaluated earlier) and read
+    0.72 s → 0.46 s at sf0.1 (r10 A/B)."""
+    return df.select(
+        F.col("vec_id").alias(id_name),
+        _as_double("embedding").alias(e_name),
+        *(c.alias(name) for name, c in extra.items()),
+    ).select(
+        id_name, e_name, *extra, F.sqrt(F.expr(_DOT.format(a=e_name, b=e_name))).alias(n_name)
+    )
+
+
+def _cosine_scored(pairs: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, cosine_sim) from joined (qe, qn) × (ce, cn)
+    sides, cosine rounded to 6 places.
+
+    Bind the raw cosine once, round the bound column: pround references
+    its operand 4×, and re-evaluating the HOF dot chain per reference
+    quadruples the hot loop (2.0 s → 0.73 s at sf0.1). CollapseProject
+    keeps the projections apart — a non-cheap expr referenced more than
+    once is never inlined."""
+    dot = F.expr(_DOT.format(a="qe", b="ce"))
+    return pairs.select(
+        "query_id",
+        "neighbor_id",
+        (dot / F.nullif(F.col("qn") * F.col("cn"), F.lit(0.0))).alias("_raw_sim"),
+    ).select("query_id", "neighbor_id", pround("_raw_sim", 6).alias("cosine_sim"))
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Keep the k best neighbors per query (cosine desc, neighbor_id as
+    the total tiebreak) via a rank-limited window — Catalyst pushes the
+    limit into the sort."""
+    w = W.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), "neighbor_id")
+    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
+        F.col("rank") <= k
+    )
+
+
 def cosine_topk(
     queries: DataFrame, corpus: DataFrame, k: int = 5
 ) -> DataFrame:
-    """Exact top-k cosine neighbors: broadcast the (small) query side,
-    score every (query, corpus) pair, keep k per query via a rank-limited
-    window (Catalyst pushes the limit into the sort)."""
+    """Exact top-k cosine neighbors: broadcast the (small) query side and
+    score every (query, corpus) pair."""
     # Unscorable vectors (NULL / NaN / Inf / off-dimension) are dropped
     # from both sides up front — see scorable(). Both sides pin to the
     # CORPUS's modal dimension: a query from a different model version
     # must return no neighbors, not NULL-padded garbage similarities.
-    #
-    # Norms are folded ONCE PER ROW before the join (O(n) folds), not per
-    # scored pair (O(n·q) folds): the per-pair form re-ran two of the
-    # three zip_with/aggregate chains for every combination — hoisting
-    # them is bit-identical (same IEEE ops, same order, evaluated
-    # earlier) and read 0.72 s → 0.46 s at sf0.1 (r10 A/B).
     d = modal_dim(corpus)
-    q = scorable(queries, d).select(
-        F.col("vec_id").alias("query_id"), _as_double("embedding").alias("qe")
-    ).select("query_id", "qe", F.sqrt(F.expr(_DOT.format(a="qe", b="qe"))).alias("qn"))
-    c = scorable(corpus, d).select(
-        F.col("vec_id").alias("neighbor_id"), _as_double("embedding").alias("ce")
-    ).select("neighbor_id", "ce", F.sqrt(F.expr(_DOT.format(a="ce", b="ce"))).alias("cn"))
-    dot = F.expr(_DOT.format(a="qe", b="ce"))
-    scored = (
-        F.broadcast(q)
-        .join(c, F.col("query_id") != F.col("neighbor_id"))
-        # Bind the raw cosine once, round the bound column: pround
-        # references its operand 4×, and re-evaluating the HOF dot chain
-        # per reference quadruples the hot loop (2.0 s → 0.73 s at sf0.1).
-        # CollapseProject keeps the projections apart — a non-cheap expr
-        # referenced more than once is never inlined.
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot / F.nullif(F.col("qn") * F.col("cn"), F.lit(0.0))).alias("_raw_sim"),
-        )
-        .select("query_id", "neighbor_id", pround("_raw_sim", 6).alias("cosine_sim"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    q = _normed(scorable(queries, d), "query_id", "qe", "qn")
+    c = _normed(scorable(corpus, d), "neighbor_id", "ce", "cn")
+    pairs = F.broadcast(q).join(c, F.col("query_id") != F.col("neighbor_id"))
+    return _top_k(_cosine_scored(pairs), k)
 
 
 @query(
@@ -195,7 +215,7 @@ def simsearch_topk_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # Random-hyperplane LSH — the approximate scale path (rows-only check;
-# recall vs the exact path is asserted in tests/test_similarity.py).
+# recall vs the exact path is asserted in tests/test_dedup_similarity.py).
 # --------------------------------------------------------------------------
 def _sql_double(x: float) -> str:
     """One float64 literal as SQL text. repr() is the shortest string
@@ -220,6 +240,19 @@ def _plane_dot_sql(e_name: str, plane) -> str:
     )
 
 
+def _sign_bits_sql(e_name: str, planes) -> str:
+    """The sign bits of an ALREADY-cast float64 array column against a
+    block of hyperplanes, packed into one bigint as SQL TEXT: bit i is
+    set iff the dot with ``planes[i]`` is positive. CASE WHEN dot > 0
+    THEN 2^i ELSE 0 — long literals, summed then cast: value-identical
+    to the historical int-bit sum (all fits in 62 bits)."""
+    bits = " + ".join(
+        f"(case when {_plane_dot_sql(e_name, plane)} > 0 then {2 ** i}L else 0L end)"
+        for i, plane in enumerate(planes)
+    )
+    return f"cast({bits} as bigint)"
+
+
 def hyperplane_signature(df: DataFrame, dim: int | None = None, n_planes: int = 16, seed: int = 42) -> DataFrame:
     """Sign-bit signature under fixed random hyperplanes. The hyperplane
     matrix is generated once on the driver (seeded → deterministic) and
@@ -239,7 +272,7 @@ def hyperplane_signature(df: DataFrame, dim: int | None = None, n_planes: int = 
     per-plane `transform(embedding, cast)` re-cast and re-allocated the
     array n_planes times per row, pure interpreted-HOF overhead since
     every plane folds the same values (r11, guide §1.2 per-task work;
-    bit-identical signatures, pinned by the packed-vs-banded equality
+    bit-identical signatures, pinned by the packed-vs-banded bit-order
     test). The whole signature expression is rendered as SQL text and
     parsed ONCE (r11, see _plane_dot_sql): the Column-API form paid one
     py4j round trip per plane-matrix element at construction time.
@@ -251,18 +284,10 @@ def hyperplane_signature(df: DataFrame, dim: int | None = None, n_planes: int = 
         raise ValueError(f"n_planes must be in [1, 62], got {n_planes}")
     if dim is None:
         dim = modal_dim(df) or 1
-    rng = np.random.RandomState(seed)
-    planes = rng.randn(n_planes, dim)
-    # CASE WHEN dot > 0 THEN 2^i ELSE 0 — long literals, summed then cast:
-    # value-identical to the historical int-bit sum (all fits in 62 bits).
-    bits = " + ".join(
-        f"(case when {_plane_dot_sql('_e', planes[i])} > 0"
-        f" then {2 ** i}L else 0L end)"
-        for i in range(n_planes)
-    )
+    planes = np.random.RandomState(seed).randn(n_planes, dim)
     return (
         df.withColumn("_e", _as_double("embedding"))
-        .withColumn("lsh_sig", F.expr(f"cast({bits} as bigint)"))
+        .withColumn("lsh_sig", F.expr(_sign_bits_sql("_e", planes)))
         .drop("_e")
     )
 
@@ -282,12 +307,10 @@ def banded_hyperplane_signature(
     recall can be bought with more bands at any band width — the knob
     table in SCALE.md extends past one machine word.
 
-    For the same (seed, dim) and n_bands × band_bits ≤ 62 this produces
-    exactly the band values ``banded_signature(hyperplane_signature(...))``
-    does (pinned in tests), so the two construction paths are
-    interchangeable; this one is also cheaper: no pack-then-unpack of a
-    full-width signature, and the per-band explode is the only row
-    multiplication."""
+    For the same (seed, dim) and n_bands × band_bits ≤ 62, band b holds
+    bits [b·band_bits, (b+1)·band_bits) of ``hyperplane_signature``'s
+    ``lsh_sig`` (pinned in tests): the planes are the same seeded draws.
+    The per-band explode is the only row multiplication."""
     if not 1 <= band_bits <= 62:
         raise ValueError(f"band_bits must be in [1, 62], got {band_bits}")
     if dim is None:  # corpus modal dimension — see hyperplane_signature
@@ -318,42 +341,12 @@ def _band_structs_sql(
     same reason as _plane_dot_sql (construction 1645 → 111 ms, r11);
     band values are bit-identical to the Column-API form (same fold,
     same literals — see _sql_double)."""
-    bands = []
-    for b in range(n_bands):
-        bits = " + ".join(
-            f"(case when {_plane_dot_sql(e_name, planes[b * band_bits + i])} > 0"
-            f" then {2 ** i}L else 0L end)"
-            for i in range(band_bits)
-        )
-        bands.append(
-            f"struct({b} as band_id, cast({bits} as bigint) as band_val)"
-        )
+    bands = (
+        f"struct({b} as band_id,"
+        f" {_sign_bits_sql(e_name, planes[b * band_bits:(b + 1) * band_bits])} as band_val)"
+        for b in range(n_bands)
+    )
     return f"array({', '.join(bands)})"
-
-
-def banded_signature(
-    sigs: DataFrame, n_bands: int = 4, band_bits: int = 4
-) -> DataFrame:
-    """Split each row's ``lsh_sig`` into ``n_bands`` bands of ``band_bits``
-    bits → (vec_id, band_id, band_val), one row per band (OR-construction:
-    two rows are candidates if they agree on ANY band). Pure bit
-    arithmetic in codegen; the explode multiplies rows by n_bands, not by
-    corpus size."""
-    mask = (1 << band_bits) - 1
-    return sigs.select(
-        "vec_id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("band_id"),
-                    F.shiftrightunsigned(F.col("lsh_sig"), i * band_bits)
-                    .bitwiseAND(F.lit(mask))
-                    .alias("band_val"),
-                )
-                for i in range(n_bands)
-            ])
-        ).alias("band"),
-    ).select("vec_id", "band.band_id", "band.band_val")
 
 
 @query("simsearch_lsh_buckets", oracle=None)  # approx → rows-only
@@ -397,32 +390,10 @@ def simsearch_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    # norms folded once per row before the candidate join, not per pair —
-    # bit-identical hoist, see cosine_topk
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), _as_double("embedding").alias("qe")
-    ).select("query_id", "qe", F.sqrt(F.expr(_DOT.format(a="qe", b="qe"))).alias("qn"))
-    c = e.select(
-        F.col("vec_id").alias("neighbor_id"), _as_double("embedding").alias("ce")
-    ).select("neighbor_id", "ce", F.sqrt(F.expr(_DOT.format(a="ce", b="ce"))).alias("cn"))
-    dot = F.expr(_DOT.format(a="qe", b="ce"))
-    scored = (
-        cands.join(c, "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        # Bind the raw cosine once, round the bound column: pround
-        # references its operand 4×, and re-evaluating the HOF dot chain
-        # per reference quadruples the hot loop (2.0 s → 0.73 s at sf0.1).
-        # CollapseProject keeps the projections apart — a non-cheap expr
-        # referenced more than once is never inlined.
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot / F.nullif(F.col("qn") * F.col("cn"), F.lit(0.0))).alias("_raw_sim"),
-        )
-        .select("query_id", "neighbor_id", pround("_raw_sim", 6).alias("cosine_sim"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), "neighbor_id")
-    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(F.col("rank") <= 5)
+    q = _normed(e.filter(F.col("vec_id") < 10), "query_id", "qe", "qn")
+    c = _normed(e, "neighbor_id", "ce", "cn")
+    pairs = cands.join(c, "neighbor_id").join(F.broadcast(q), "query_id")
+    return _top_k(_cosine_scored(pairs), 5)
 
 
 # --------------------------------------------------------------------------
@@ -573,42 +544,19 @@ def simsearch_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("probe_rank") <= nprobe)
         .select("query_id", "qe", "centroid_id")
     )
-    # norms folded once per row before the probe join, not per pair —
-    # bit-identical hoist, see cosine_topk
-    c = e.join(assignments, "vec_id").select(
-        F.col("vec_id").alias("neighbor_id"),
-        _as_double("embedding").alias("ce"),
-        F.col("centroid_id").alias("c_centroid_id"),
-    ).select(
-        "neighbor_id", "ce", "c_centroid_id",
-        F.sqrt(F.expr(_DOT.format(a="ce", b="ce"))).alias("cn"),
+    c = _normed(
+        e.join(assignments, "vec_id"), "neighbor_id", "ce", "cn",
+        c_centroid_id=F.col("centroid_id"),
     )
-    dot = F.expr(_DOT.format(a="qe", b="ce"))
     qn = F.sqrt(F.expr(_DOT.format(a="qe", b="qe")))
-    scored = (
-        F.broadcast(probes.select("query_id", "qe", "centroid_id", qn.alias("qn")))
-        .join(
-            c,
-            (F.col("centroid_id") == F.col("c_centroid_id"))
-            & (F.col("query_id") != F.col("neighbor_id")),
-        )
-        # Bind the raw cosine once, round the bound column: pround
-        # references its operand 4×, and re-evaluating the HOF dot chain
-        # per reference quadruples the hot loop (2.0 s → 0.73 s at sf0.1).
-        # CollapseProject keeps the projections apart — a non-cheap expr
-        # referenced more than once is never inlined.
-        .select(
-            "query_id",
-            "neighbor_id",
-            (dot / F.nullif(F.col("qn") * F.col("cn"), F.lit(0.0))).alias("_raw_sim"),
-        )
-        .select("query_id", "neighbor_id", pround("_raw_sim", 6).alias("cosine_sim"))
+    pairs = F.broadcast(
+        probes.select("query_id", "qe", "centroid_id", qn.alias("qn"))
+    ).join(
+        c,
+        (F.col("centroid_id") == F.col("c_centroid_id"))
+        & (F.col("query_id") != F.col("neighbor_id")),
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 5)
-    )
+    return _top_k(_cosine_scored(pairs), 5)
 
 
 def cosine_topk_np(queries: DataFrame, corpus: DataFrame, k: int = 5) -> DataFrame:
@@ -670,11 +618,7 @@ def cosine_topk_np(queries: DataFrame, corpus: DataFrame, k: int = 5) -> DataFra
     )
     # round in Spark, not numpy: np.round is half-to-even; F.round matches
     # the DuckDB oracle's rounding like every other query here
-    scored = scored.withColumn("cosine_sim", pround("cosine_sim", 6))
-    w = W.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), "neighbor_id")
-    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
-        F.col("rank") <= k
-    )
+    return _top_k(scored.withColumn("cosine_sim", pround("cosine_sim", 6)), k)
 
 
 @query("simsearch_topk_exact_np", oracle=None)
@@ -735,12 +679,11 @@ def _spread_pair_frame(vn: DataFrame) -> DataFrame:
     return vn.repartition(n, F.pmod(F.xxhash64("vec_id"), F.lit(n * 64)))
 
 
-def embedding_dup_ids(
-    v: DataFrame, block_cols: list[str], threshold: float = 0.9
-) -> DataFrame:
-    """Keep-first near-dup ids: vec_id b is a duplicate when any a < b in
-    the same block has cosine ≥ threshold. `v` must carry vec_id and a
-    float64 `e` array; the pair space is confined to the block.
+def _block_pairs(v: DataFrame, block_cols: list[str]) -> tuple[DataFrame, F.Column]:
+    """The blocked self-join behind every embedding near-dup operator:
+    (a, b) pairs with a.vec_id < b.vec_id inside one block, and their
+    cosine as a Column over the join. `v` must carry vec_id and a float64
+    `e` array; the pair space is confined to the block.
 
     The norm is folded once per ROW before the self-join (O(n) folds) —
     per-pair it re-ran two of the three zip_with/aggregate chains for
@@ -754,7 +697,9 @@ def embedding_dup_ids(
     synthetic key before the self-join — see ``_spread_pair_frame``
     (r11): otherwise the O(Σ|block|²) pair scoring, the dominant
     compute, runs on however few tasks the scan happened to produce.
-    Placement-only (the build side is broadcast), rows identical."""
+    Placement-only (the build side is broadcast), rows identical.
+
+    nullif guards the zero-norm pair (ANSI divide would error)."""
     nrm = F.sqrt(F.expr(_DOT.format(a="e", b="e")))
     vn = v if "_nrm" in v.columns else v.withColumn("_nrm", nrm)
     vn = _spread_pair_frame(vn)
@@ -763,14 +708,30 @@ def embedding_dup_ids(
     cond = F.col("a.vec_id") < F.col("b.vec_id")
     for c in block_cols:
         cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-    return (
-        a.join(b, cond)
-        .filter(
-            (dot / F.nullif(F.col("a._nrm") * F.col("b._nrm"), F.lit(0.0)))
-            >= threshold
-        )
-        .select(F.col("b.vec_id").alias("vec_id"))
-        .distinct()
+    return a.join(b, cond), dot / F.nullif(F.col("a._nrm") * F.col("b._nrm"), F.lit(0.0))
+
+
+def embedding_dup_ids(
+    v: DataFrame, block_cols: list[str], threshold: float = 0.9
+) -> DataFrame:
+    """Keep-first near-dup ids: vec_id b is a duplicate when any a < b in
+    the same block has cosine ≥ threshold. `v` must carry vec_id, a
+    float64 `e` array and the ``block_cols`` (optionally a pre-folded
+    ``_nrm`` — see ``_block_pairs``)."""
+    pairs, sim = _block_pairs(v, block_cols)
+    return pairs.filter(sim >= threshold).select(F.col("b.vec_id").alias("vec_id")).distinct()
+
+
+def _label_keep_counts(e: DataFrame, dup_ids: DataFrame) -> DataFrame:
+    """Per-label (n_kept, n_dropped) of a keep-first removal: every corpus
+    row is counted, dropped iff its vec_id is in ``dup_ids``. The removal
+    ships 8-byte ids, not vectors."""
+    flagged = e.select("vec_id", "label").join(
+        dup_ids.withColumn("is_dup", F.lit(1)), "vec_id", "left"
+    )
+    return flagged.groupBy("label").agg(
+        F.count(F.when(F.col("is_dup").isNull(), 1)).alias("n_kept"),
+        F.count(F.when(F.col("is_dup").isNotNull(), 1)).alias("n_dropped"),
     )
 
 
@@ -806,13 +767,7 @@ def pipeline_embedding_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = es.select("vec_id", "label", _as_double("embedding").alias("e")).join(
         banded, "vec_id"
     )
-    dup_ids = embedding_dup_ids(v, ["band_id", "band_val"], threshold=0.9)
-    base = e.select("vec_id", "label")
-    flagged = base.join(dup_ids.withColumn("is_dup", F.lit(1)), "vec_id", "left")
-    return flagged.groupBy("label").agg(
-        F.count(F.when(F.col("is_dup").isNull(), 1)).alias("n_kept"),
-        F.count(F.when(F.col("is_dup").isNotNull(), 1)).alias("n_dropped"),
-    )
+    return _label_keep_counts(e, embedding_dup_ids(v, ["band_id", "band_val"], threshold=0.9))
 
 
 @query(
@@ -852,40 +807,9 @@ def pipeline_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the anti join shuffles 8-byte ids, not vectors."""
     e = Catalog(spark, sf_dir).embeddings
     # pairs form only between scorable vectors (see scorable()); the
-    # per-label totals below still count every row of the corpus.
-    # Norm folded once per row before the self-join (bit-identical hoist,
-    # see embedding_dup_ids — two of three per-pair HOF folds removed).
-    v = scorable(e).select(
-        "vec_id", "label", F.expr("transform(embedding, x -> cast(x as double))").alias("e")
-    ).withColumn(
-        "_nrm",
-        F.sqrt(F.expr("aggregate(zip_with(e, e, (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)")),
-    )
-    # spread the O(Σ|label-block|²) pair scoring across the cluster in
-    # the broadcast regime — see _spread_pair_frame (r11). Placement-
-    # only: the ≥0.9 filter is row-local and the output is count
-    # aggregates, rows verified identical at sf0.001/0.01/0.1 + oracle
-    # green.
-    v = _spread_pair_frame(v)
-    a, b = v.alias("a"), v.alias("b")
-    dot = F.expr(
-        "aggregate(zip_with(a.e, b.e, (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)"
-    )
-    # nullif guards the zero-norm pair (ANSI divide would error); a NULL
-    # embedding yields a NULL dot, so the >= filter drops it on both engines.
-    dup_ids = (
-        a.join(b, (F.col("a.label") == F.col("b.label")) & (F.col("a.vec_id") < F.col("b.vec_id")))
-        .filter((dot / F.nullif(F.col("a._nrm") * F.col("b._nrm"), F.lit(0.0))) >= 0.9)
-        .select(F.col("b.vec_id").alias("vec_id"))
-        .distinct()
-    )
-    flagged = e.select("vec_id", "label").join(
-        dup_ids.withColumn("is_dup", F.lit(1)), "vec_id", "left"
-    )
-    return flagged.groupBy("label").agg(
-        F.count(F.when(F.col("is_dup").isNull(), 1)).alias("n_kept"),
-        F.count(F.when(F.col("is_dup").isNotNull(), 1)).alias("n_dropped"),
-    )
+    # per-label totals still count every row of the corpus.
+    v = scorable(e).select("vec_id", "label", _as_double("embedding").alias("e"))
+    return _label_keep_counts(e, embedding_dup_ids(v, ["label"], threshold=0.9))
 
 
 # --------------------------------------------------------------------------

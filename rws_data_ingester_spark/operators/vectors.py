@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from rws_data_ingester_spark.catalog import Catalog
 from rws_data_ingester_spark.functions.rounding import pround
-from rws_data_ingester_spark.operators.similarity import cosine_topk, scorable
+from rws_data_ingester_spark.operators.similarity import _top_k, cosine_topk, scorable
 from rws_data_ingester_spark.plans.registry import query
 
 
@@ -238,9 +238,4 @@ def simsearch_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = cosine_topk(e.filter(F.col("vec_id") < 10), cand, k=shortlist_n).select(
         "query_id", "neighbor_id", "cosine_sim"
     )
-    reranked = shortlist.join(exact, ["query_id", "neighbor_id"])
-    w = W.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), "neighbor_id")
-    return (
-        reranked.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k_final)
-    )
+    return _top_k(shortlist.join(exact, ["query_id", "neighbor_id"]), k_final)

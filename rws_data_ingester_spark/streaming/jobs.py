@@ -7,7 +7,7 @@ src/rotterdam_swimming_advice.py:295). Its direct Spark analog is
 implemented here as ``scheduled_refresh``. On top of that, the [EXT]
 streaming surface: watermarked tumbling/sliding/session windows,
 streaming dedup, stream-static joins, and custom stateful processing via
-``transformWithStateInPandas``-style grouped state.
+``applyInPandasWithState`` grouped state.
 
 Each op returns a *streaming* DataFrame built from a parquet replay of
 the events table; ``run_to_memory`` drives it with availableNow to
@@ -302,72 +302,6 @@ def scheduled_refresh(
             .start()
         )
         q.awaitTermination()
-
-
-def stateful_running_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same running per-user totals on the transformWithStateInPandas API
-    (Spark 4.x successor to applyInPandasWithState: typed state handles,
-    timers, state TTL). Kept alongside the legacy form so both stateful
-    surfaces stay exercised; the equivalence test asserts identical
-    results. NOTE: the TWS Python worker protocol requires google.protobuf
-    at runtime — absent in this container, so the test importorskips; the
-    applyInPandasWithState path is the one exercised end-to-end here."""
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    state_schema = StructType(
-        [StructField("total", DoubleType()), StructField("count", LongType())]
-    )
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("total_value", DoubleType()),
-            StructField("n_events", LongType()),
-        ]
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            total, count = self._state.get() if self._state.exists() else (0.0, 0)
-            for pdf in rows:
-                total += float(pdf["value"].sum())
-                count += len(pdf)
-            self._state.update((total, count))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "total_value": [round(total, 4)],
-                    "n_events": [count],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    ev = events_stream(spark, sf_dir)
-    return (
-        # Same contract as the applyInPandasWithState form: no watermark
-        # (all events count toward the running totals; timeMode="None"
-        # keeps no event-time state anyway) and no `ts` in the Arrow path
-        # (pandas' datetime64[ns] range limit).
-        ev.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            RunningTotals(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
 
 
 def stream_stream_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -78,17 +78,14 @@ def test_lsh_candidate_fraction_shrinks_with_band_bits(spark):
     candidate fraction geometrically — that's what makes the probe
     tunable per corpus size instead of a fixed 16-bucket table."""
     from rws_data_ingester_spark.catalog import Catalog
-    from rws_data_ingester_spark.operators.similarity import (
-        banded_signature,
-        hyperplane_signature,
-    )
+    from rws_data_ingester_spark.operators.similarity import banded_hyperplane_signature
 
     e = Catalog(spark, SF_DIR).embeddings
     n = e.count()
-    sigs = hyperplane_signature(e.select("vec_id", "embedding"))
+    vecs = e.select("vec_id", "embedding")
     fracs = []
     for band_bits, n_bands in ((2, 8), (4, 4), (8, 2)):
-        b = banded_signature(sigs, n_bands=n_bands, band_bits=band_bits)
+        b = banded_hyperplane_signature(vecs, n_bands=n_bands, band_bits=band_bits)
         qb = b.filter(F.col("vec_id") < 10).select(
             F.col("vec_id").alias("qid"), "band_id", "band_val"
         )
@@ -224,25 +221,25 @@ def test_cosine_zero_vector_is_null_cross_engine(spark, tmp_path):
 
 def test_banded_hyperplane_signature_matches_packed_path(spark):
     """The band-first construction (no 62-plane cap) must produce exactly
-    the (vec_id, band_id, band_val) rows the packed-long path does for the
-    same seed and a ≤62-plane configuration — the two construction paths
-    are interchangeable, so recall/cost numbers measured on one apply to
-    the other."""
+    the bands of the packed 16-bit ``lsh_sig`` for the same seed: band b
+    is bits [4b, 4b+4) of the packed long, low bit first. Pins the bit
+    order both builders share, so recall/cost numbers measured on one
+    apply to the other."""
     from rws_data_ingester_spark.catalog import Catalog
     from rws_data_ingester_spark.operators.similarity import (
         banded_hyperplane_signature,
-        banded_signature,
         hyperplane_signature,
     )
 
     e = Catalog(spark, SF_DIR).embeddings.select("vec_id", "embedding").limit(200)
-    packed = banded_signature(
-        hyperplane_signature(e, n_planes=16), n_bands=4, band_bits=4
-    )
-    direct = banded_hyperplane_signature(e, n_bands=4, band_bits=4)
-    a = {tuple(r) for r in packed.collect()}
-    b = {tuple(r) for r in direct.collect()}
-    assert a == b
+    packed = {
+        (r["vec_id"], band, (r["lsh_sig"] >> (4 * band)) & 0xF)
+        for r in hyperplane_signature(e, n_planes=16).collect()
+        for band in range(4)
+    }
+    direct = {tuple(r) for r in banded_hyperplane_signature(e, n_bands=4, band_bits=4).collect()}
+    assert len(direct) == 4 * 200
+    assert packed == direct
 
 
 def test_banded_hyperplane_signature_beyond_word_width(spark):
@@ -276,13 +273,13 @@ def test_banded_hyperplane_signature_beyond_word_width(spark):
 
 
 def test_minhash_sql_shingles_match_shingles(spark):
-    """r10 ADVICE regression pin: minhash_signature's SQL-text gram
-    assembly (_shingles_sql) must stay byte-identical to the exported,
-    property-tested shingles() Column form on a torture corpus — short
-    rows (< k tokens), double spaces, empty string, NULL text, exactly-k
-    tokens, long rows. A future edit to either form that diverges fails
-    here instead of silently changing MinHash signatures."""
-    from rws_data_ingester_spark.operators.dedup import _shingles_sql, shingles
+    """Regression pin on the one shingle builder behind minhash_signature:
+    a torture corpus — short rows (< k tokens), double spaces, empty
+    string, NULL text, exactly-k tokens, long rows — must shingle to the
+    literal lists below, captured from the former Column-lambda form. An
+    edit that changes any of them would silently change MinHash
+    signatures."""
+    from rws_data_ingester_spark.operators.dedup import shingles
 
     rows = [
         (0, "one"),
@@ -295,13 +292,26 @@ def test_minhash_sql_shingles_match_shingles(spark):
         (7, None),
         (8, "repeat repeat repeat repeat repeat"),
     ]
+    expected = {
+        0: ["one"],
+        1: ["two words"],
+        2: ["exactly three tokens"],
+        3: ["now four whole", "four whole tokens"],
+        4: ["a b c", "b c d", "c d e", "d e f", "e f g", "f g h", "g h i", "h i j", "i j k"],
+        5: [
+            "double  space", " space ", "space  ", "  runs", " runs tokenize",
+            "runs tokenize as", "tokenize as empty", "as empty strings",
+        ],
+        6: [""],
+        7: [""],
+        8: ["repeat repeat repeat"],
+    }
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    both = df.select(
-        shingles(F.col("text"), 3).alias("col_form"),
-        F.expr(_shingles_sql("text", 3)).alias("sql_form"),
-    ).collect()
-    for r in both:
-        assert r["col_form"] == r["sql_form"], r
+    got = {
+        r["doc_id"]: r["s"]
+        for r in df.select("doc_id", shingles("text", 3).alias("s")).collect()
+    }
+    assert got == expected
 
 
 def test_sql_double_literal_roundtrips_exactly(spark):

@@ -56,10 +56,10 @@ def test_shingle_count_bound_and_determinism(spark, words):
     and shingling is deterministic across evaluations."""
     text = " ".join(words)
     df = spark.createDataFrame([(text,)], "text string")
-    out = df.select(F.size(shingles(F.col("text"), 3)).alias("n")).collect()
+    out = df.select(F.size(shingles("text", 3)).alias("n")).collect()
     n_tokens = len(words)
     assert 1 <= out[0]["n"] <= max(1, n_tokens - 3 + 1)
-    again = df.select(F.size(shingles(F.col("text"), 3)).alias("n")).collect()
+    again = df.select(F.size(shingles("text", 3)).alias("n")).collect()
     assert again[0]["n"] == out[0]["n"]
 
 

@@ -378,50 +378,6 @@ def test_lsh_hot_bucket_guard_error_mode_fails_fast(spark):
         lsh_candidate_pairs(sigs, "doc_id").count()
     ok = lsh_candidate_pairs(_planted_sigs(spark, n_hot=200, n_cold=10), "doc_id")
     assert ok.count() == 200 * 199 // 2
-    with pytest.raises(ValueError, match="on_oversize"):
-        lsh_candidate_pairs(sigs, "doc_id", on_oversize="bogus")
-
-
-def test_lsh_hot_bucket_guard_star_route_bounds_pairs_and_preserves_cc(spark):
-    """on_oversize='star': the 20k mega-bucket contributes LINEAR star
-    edges (19,999) instead of ~2x10^8 clique pairs, and connected
-    components over the routed output still resolve the bucket to ONE
-    cluster — the connectivity contract the removal pipelines need."""
-    from rws_data_ingester_spark.operators.cluster import connected_components
-    from rws_data_ingester_spark.operators.dedup import lsh_candidate_pairs
-
-    sigs = _planted_sigs(spark, n_hot=20_000, n_cold=50)
-    routed = lsh_candidate_pairs(sigs, "doc_id", on_oversize="star")
-    assert routed.count() == 19_999
-    comp = connected_components(routed, vertices=sigs.select("doc_id"))
-    sizes = sorted(
-        r["n"] for r in comp.groupBy("component").agg(F.count("*").alias("n")).collect()
-    )
-    assert sizes == [1] * 50 + [20_000]
-
-
-def test_lsh_guard_star_route_cc_equivalent_to_cliques(spark):
-    """Route-mode connectivity == unguarded clique connectivity, pinned at
-    a scale where the cliques are still computable (300-member bucket,
-    threshold 100 forces the star route)."""
-    from rws_data_ingester_spark.operators.cluster import connected_components
-    from rws_data_ingester_spark.operators.dedup import lsh_candidate_pairs
-
-    sigs = _planted_sigs(spark, n_hot=300, n_cold=30)
-    v = sigs.select("doc_id")
-    cliques = lsh_candidate_pairs(sigs, "doc_id", max_bucket_size=1_000)
-    routed = lsh_candidate_pairs(
-        sigs, "doc_id", max_bucket_size=100, on_oversize="star"
-    )
-    n_cliques, n_routed = cliques.count(), routed.count()
-    assert n_routed == 299 and n_cliques == 300 * 299 // 2
-    cc_cliques = sorted(
-        map(tuple, connected_components(cliques, vertices=v).collect())
-    )
-    cc_routed = sorted(
-        map(tuple, connected_components(routed, vertices=v).collect())
-    )
-    assert cc_cliques == cc_routed
 
 
 # --------------------------------------------------------------------------

@@ -5,8 +5,6 @@ result multiset as its batch formulation in operators.temporal.
 
 from __future__ import annotations
 
-import pytest
-
 from rws_data_ingester_spark.plans import REGISTRY
 from rws_data_ingester_spark.streaming import jobs
 
@@ -169,26 +167,6 @@ def test_rate_source_drives_streaming_agg(spark):
             raise AssertionError(f"rate stream never produced 4 buckets: {rows}")
     finally:
         q.stop()
-
-
-def test_transform_with_state_matches_apply_in_pandas(spark):
-    """The Spark 4 transformWithStateInPandas form must produce the same
-    final per-user totals as the applyInPandasWithState form.
-
-    The TWS worker protocol needs google.protobuf, which this runtime
-    lacks — skip (not xfail: the code path is correct, the dep is absent).
-    """
-    pytest.importorskip("google.protobuf.descriptor")
-    legacy = jobs.run_to_memory(jobs.stateful_running_totals(spark, SF_DIR), "update")
-    tws = jobs.run_to_memory(jobs.stateful_running_totals_tws(spark, SF_DIR), "update")
-
-    def finals(df):
-        rows = {}
-        for r in df.collect():  # update mode: last emit per user wins
-            rows[r["user_id"]] = (r["total_value"], r["n_events"])
-        return rows
-
-    assert finals(legacy) == finals(tws)
 
 
 def test_stream_stream_join_matches_batch(spark):
