@@ -157,10 +157,23 @@ def _star_components(half: DataFrame, max_iter: int) -> DataFrame:
     fixed. sum(component) over the labels is therefore stationary exactly
     at the fixpoint: one aggregate per round instead of a join-and-compare
     shuffle. The sum runs in decimal(38,0), so 64-bit ids cannot overflow
-    it; ids must be numeric on this branch.
+    it; ids must be integral on this branch, and any other id type is a
+    ``TypeError`` here, before the first round (a string id would
+    otherwise die mid-round casting to the decimal).
 
     The checkpoints are lazy: the sum's job stores the blocks it computes,
     with no separate count job per checkpoint."""
+    from pyspark.sql import types as T
+
+    id_type = half.schema["src"].dataType
+    if not (
+        isinstance(id_type, T.IntegralType)
+        or (isinstance(id_type, T.DecimalType) and id_type.scale == 0)
+    ):
+        raise TypeError(
+            f"connected_components above driver_max_edges needs integral ids,"
+            f" got {id_type}; map the ids to longs first"
+        )
     cur = (
         half.select(*_canon(F.col("src"), F.col("dst")))
         .distinct()

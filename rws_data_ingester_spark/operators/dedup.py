@@ -442,28 +442,26 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup statistics per label block. Blocking on `label`
-    stands in for the IVF/LSH bucket a production run would use — the
-    crossJoin never leaves a block."""
+    stands in for the IVF/LSH bucket a production run would use — pair
+    scoring never leaves a block."""
     from rws_data_ingester_spark.operators.similarity import (
         _as_double,
-        _block_pairs,
+        _block_cosine_stats,
         scorable,
     )
 
     e = Catalog(spark, sf_dir).embeddings
     # Unscorable embeddings (NULL / NaN / Inf) never form pairs on either
     # engine — see similarity.scorable() and its oracle twin above. The
-    # blocked self-join and its cosine are embedding_dup_ids' own (see
-    # similarity._block_pairs); only the per-label aggregate is ours.
+    # pair scoring is embedding_dup_ids' own block kernel; one row per
+    # label comes back, so only the mean is ours.
     v = scorable(e).select("vec_id", "label", _as_double("embedding").alias("e"))
-    pairs, sim = _block_pairs(v, ["label"])
-    return (
-        pairs.select(F.col("a.label").alias("label"), sim.alias("sim"))
-        .groupBy("label")
-        .agg(
-            F.count(F.when(F.col("sim") >= 0.9, 1)).alias("n_neardups"),
-            (pround(F.avg("sim"), 4) + 0.0).alias("avg_sim"),  # +0.0: -0.0 normalization
-        )
+    stats = _block_cosine_stats(v, ["label"], threshold=0.9)
+    avg = F.col("sim_sum") / F.nullif(F.col("n_sim"), F.lit(0))
+    return stats.select(
+        "label",
+        F.col("n_ge").alias("n_neardups"),
+        (pround(avg, 4) + 0.0).alias("avg_sim"),  # +0.0: -0.0 normalization
     )
 
 

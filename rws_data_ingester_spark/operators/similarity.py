@@ -15,12 +15,15 @@ Each approximate tier is a candidate generator followed by the same
 exact cosine re-rank (``_cosine_scored`` + ``_top_k``). All cosines are
 computed in float64 after an explicit cast from the float32 storage type
 so results are engine-comparable.
+
+Embedding near-dup removal (``embedding_dup_ids``) scores the pairs of a
+block (label, LSH band or k-means cell) with one numpy kernel per block
+(``_scored_blocks``), not a Catalyst self-join: the kernel folds each
+dot in ``_DOT``'s order, so its threshold decisions are bit-identical to
+the Catalyst form, without interpreting a zip_with/aggregate per pair.
 """
 
 from __future__ import annotations
-
-import os
-from urllib.parse import urlparse
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window as W
@@ -630,85 +633,100 @@ def simsearch_topk_exact_np(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_topk_np(e.filter(F.col("vec_id") < 10), e, k=5)
 
 
-def _spread_pair_frame(vn: DataFrame) -> DataFrame:
-    """Spread a pair-scoring frame across the cluster in the
-    BROADCAST-JOIN regime (r11, guide §2.5/§2.6).
+# Rows of a block scored per numpy step: a step holds the block's (m, d)
+# matrix plus a few (T, m) float64 buffers, so a Python worker needs
+# O(m·d + T·m) floats per block, not O(m²).
+_TILE_ROWS = 128
 
-    The embedding near-dup pipelines score O(Σ|block|²) pairs through a
-    self-join on a block key (LSH bands / k-means cells / labels). While
-    the corpus fits the broadcast threshold the planner builds one side
-    as a broadcast relation and probes the other IN PLACE — on few-file
-    corpora that is one or a handful of scan tasks carrying ALL of the
-    dominant compute. Placement of the probe side is free under a
-    broadcast join (it cannot change which pairs form), so spread it by
-    a deterministic uniform synthetic key: ``pmod(xxhash64(vec_id),
-    64·N)`` — 64× more key values than partitions so the hash spreads
-    evenly (guide §2.5), deterministic so task retries reproduce the
-    same placement, and UNIFORM, which beats partitioning by the block
-    key itself: a 16-cell k-means blocking hash-splits lumpily and its
-    hot cells pile onto few tasks (measured +31% vs plain at the
-    multi-file sf1 clone), while row-uniform placement balances the
-    per-task pair work by construction (measured −52% vs plain at sf1
-    and −57% at sf0.1 on the banded blocking; −53%/−56% on the cell
-    blocking).
 
-    SIZE-GATED off in the sort-merge regime: above the gate the join
-    plans its own exchanges on the block key (where AQE skew-splitting
-    applies) and a non-join-key repartition would add a second full
-    shuffle of the vector payload. The gate is the session's
-    ``spark.sql.autoBroadcastJoinThreshold``, read at call time — the
-    knob that decides the same regime for the planner, so the two cannot
-    drift apart; ≤0 (broadcast disabled) means no spread. The size is a
-    driver-side metadata stat of the frame's input files (no Spark job,
-    same idiom as the sessionization shard gate); unknown/exotic sources
-    fail TOWARD the scale-safe plain plan."""
-    spark = vn.sparkSession
-    gate = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-    if gate <= 0:
-        return vn
-    try:
-        files = vn.inputFiles()
-        size = sum(
-            os.path.getsize(urlparse(uri).path or uri) for uri in files
+def _block_cosines(x: np.ndarray):
+    """Cosines of one block of equal-length float64 vectors, as
+    ``(r0, sims)`` row tiles: ``sims[i, j]`` is the cosine of rows r0+i
+    and r0+j (columns start at r0; earlier columns are earlier rows,
+    already scored), NaN where the denominator is zero (SQL NULL).
+
+    Bit-identical to the Catalyst ``_DOT`` fold: the dot is the same
+    left-to-right ``acc + x[k]*y[k]`` sum from 0.0, vectorized across the
+    pairs of a tile and never across k; the norm is ``sqrt`` of that fold
+    of ``x*x``; the cosine is ``dot / (na*nb)``. A BLAS matmul
+    reassociates the sum and flips pairs that sit on the threshold."""
+    m, d = x.shape
+    xt = np.ascontiguousarray(x.T)  # row k: component k of every vector
+    sq = np.zeros(m)
+    for k in range(d):
+        sq += xt[k] * xt[k]
+    nrm = np.sqrt(sq)
+    for r0 in range(0, m, _TILE_ROWS):
+        r1 = min(r0 + _TILE_ROWS, m)
+        dot = np.zeros((r1 - r0, m - r0))
+        prod = np.empty_like(dot)
+        for k in range(d):
+            np.multiply(xt[k, r0:r1, None], xt[k, None, r0:], out=prod)
+            dot += prod
+        den = np.multiply(nrm[r0:r1, None], nrm[None, r0:], out=prod)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            sims = dot / den
+        sims[den == 0.0] = np.nan
+        yield r0, sims
+
+
+def _score_block(ids: np.ndarray, vecs: np.ndarray, threshold: float):
+    """Keep-first scoring of one block over its pairs (a, b) with
+    a.vec_id < b.vec_id → (dup ids, number of pairs with cosine ≥
+    threshold, sum and count of the defined cosines).
+
+    Dirty input keeps the ``_DOT`` fold's semantics: vectors of
+    different lengths never pair (zip_with NULL-pads, so their cosine is
+    NULL); a NULL vector never pairs; a NULL or NaN element (Arrow hands
+    NULL elements over as NaN) makes every cosine it touches NaN, which
+    is neither a dup nor counted — SQL's ``>=`` would rank NaN above the
+    threshold, numpy's does not."""
+    lens = np.array([-1 if x is None else len(x) for x in vecs])
+    dups, n_ge, sim_sum, n_sim = [], 0, 0.0, 0
+    for d in np.unique(lens[lens > 0]):
+        idx = np.flatnonzero(lens == d)
+        idx = idx[np.argsort(ids[idx], kind="stable")]
+        g = ids[idx]
+        hit = np.zeros(len(idx), dtype=bool)
+        for r0, sims in _block_cosines(np.stack(vecs[idx]).astype(np.float64, copy=False)):
+            later = g[r0:r0 + len(sims), None] < g[None, r0:]
+            ge = later & (sims >= threshold)
+            hit[r0:] |= ge.any(axis=0)
+            n_ge += int(ge.sum())
+            ok = later & ~np.isnan(sims)
+            n_sim += int(ok.sum())
+            sim_sum += float(sims[ok].sum())
+        dups.append(g[hit])
+    return (np.concatenate(dups) if dups else ids[:0]), n_ge, sim_sum, n_sim
+
+
+def _scored_blocks(v: DataFrame, block_cols: list[str], kernel, schema: str) -> DataFrame:
+    """Run ``kernel`` over the rows of every block of ``v`` (vec_id, a
+    float64 ``e`` array and the ``block_cols``) in one Python worker call
+    per block — the refine step of candidate blocking (REPOSE, ICDE
+    2021): exact cosine as one vectorized numpy kernel per block instead
+    of one interpreted zip_with/aggregate fold per pair (ZipWith and
+    ArrayAggregate are CodegenFallback).
+
+    The hash exchange on the block columns pins an EXPLICIT partition
+    count (REPARTITION_BY_NUM), so AQE cannot coalesce every block onto
+    one Python worker; the grouped map reuses it, no second shuffle. A
+    whole block must fit one worker — the blocking (labels, LSH bands,
+    k-means cells) sets the block size. NULL block keys never pair, as
+    under the equi-join this replaced."""
+    if block_cols:
+        keyed = v.filter(
+            F.expr(" AND ".join(f"`{c}` IS NOT NULL" for c in block_cols))
         )
-    except Exception:
-        return vn
-    if not files or size > gate:
-        return vn
-    n = shuffle_partitions(spark)
-    return vn.repartition(n, F.pmod(F.xxhash64("vec_id"), F.lit(n * 64)))
-
-
-def _block_pairs(v: DataFrame, block_cols: list[str]) -> tuple[DataFrame, F.Column]:
-    """The blocked self-join behind every embedding near-dup operator:
-    (a, b) pairs with a.vec_id < b.vec_id inside one block, and their
-    cosine as a Column over the join. `v` must carry vec_id and a float64
-    `e` array; the pair space is confined to the block.
-
-    The norm is folded once per ROW before the self-join (O(n) folds) —
-    per-pair it re-ran two of the three zip_with/aggregate chains for
-    every pair in the block: bit-identical hoist, measured 8.8 s →
-    2.6 s noop at sf0.1 on the k-means-cell blocking (r10 A/B). A caller
-    whose blocking EXPLODES rows (LSH bands: ×n_bands rows per vector)
-    can pass ``_nrm`` pre-folded per VECTOR, before its explode — the
-    same value this would compute, one fold earlier (r11).
-
-    In the broadcast-join regime the frame is spread by a uniform
-    synthetic key before the self-join — see ``_spread_pair_frame``
-    (r11): otherwise the O(Σ|block|²) pair scoring, the dominant
-    compute, runs on however few tasks the scan happened to produce.
-    Placement-only (the build side is broadcast), rows identical.
-
-    nullif guards the zero-norm pair (ANSI divide would error)."""
-    nrm = F.sqrt(F.expr(_DOT.format(a="e", b="e")))
-    vn = v if "_nrm" in v.columns else v.withColumn("_nrm", nrm)
-    vn = _spread_pair_frame(vn)
-    a, b = vn.alias("a"), vn.alias("b")
-    dot = F.expr(_DOT.format(a="a.e", b="b.e"))
-    cond = F.col("a.vec_id") < F.col("b.vec_id")
-    for c in block_cols:
-        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-    return a.join(b, cond), dot / F.nullif(F.col("a._nrm") * F.col("b._nrm"), F.lit(0.0))
+    else:
+        # one block; groupBy(F.lit(0)) would resolve as a group-by ordinal
+        keyed, block_cols = v.withColumn("_block", F.lit(0)), ["_block"]
+    return (
+        keyed.select("vec_id", "e", *block_cols)
+        .repartition(shuffle_partitions(v.sparkSession), *block_cols)
+        .groupBy(*block_cols)
+        .applyInPandas(kernel, schema)
+    )
 
 
 def embedding_dup_ids(
@@ -716,10 +734,37 @@ def embedding_dup_ids(
 ) -> DataFrame:
     """Keep-first near-dup ids: vec_id b is a duplicate when any a < b in
     the same block has cosine ≥ threshold. `v` must carry vec_id, a
-    float64 `e` array and the ``block_cols`` (optionally a pre-folded
-    ``_nrm`` — see ``_block_pairs``)."""
-    pairs, sim = _block_pairs(v, block_cols)
-    return pairs.filter(sim >= threshold).select(F.col("b.vec_id").alias("vec_id")).distinct()
+    float64 `e` array and the ``block_cols``; scoring is the block kernel
+    (``_scored_blocks``)."""
+    import pandas as pd
+
+    def dup_ids(pdf):
+        ids = _score_block(pdf["vec_id"].to_numpy(), pdf["e"].to_numpy(), threshold)[0]
+        return pd.DataFrame({"vec_id": ids})
+
+    id_type = v.schema["vec_id"].dataType.simpleString()
+    return _scored_blocks(v, block_cols, dup_ids, f"vec_id {id_type}").distinct()
+
+
+def _block_cosine_stats(
+    v: DataFrame, block_cols: list[str], threshold: float = 0.9
+) -> DataFrame:
+    """Per block with at least one pair: (*block_cols, n_ge, sim_sum,
+    n_sim) — pairs with cosine ≥ threshold, and the sum and count of the
+    defined cosines (their mean is the SQL AVG of the pair cosines).
+    Same kernel and input contract as ``embedding_dup_ids``."""
+    import pandas as pd
+
+    def stats(pdf):
+        ids = pdf["vec_id"].to_numpy()
+        if len(np.unique(ids)) < 2:  # no a.vec_id < b.vec_id pair
+            return pd.DataFrame(columns=[*block_cols, "n_ge", "sim_sum", "n_sim"])
+        _, n_ge, sim_sum, n_sim = _score_block(ids, pdf["e"].to_numpy(), threshold)
+        return pdf[block_cols].iloc[:1].assign(n_ge=n_ge, sim_sum=sim_sum, n_sim=n_sim)
+
+    keys = [f"`{c}` {v.schema[c].dataType.simpleString()}" for c in block_cols]
+    schema = ", ".join([*keys, "n_ge long, sim_sum double, n_sim long"])
+    return _scored_blocks(v, block_cols, stats, schema)
 
 
 def _label_keep_counts(e: DataFrame, dup_ids: DataFrame) -> DataFrame:

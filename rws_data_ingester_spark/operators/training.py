@@ -49,6 +49,11 @@ from rws_data_ingester_spark.plans.registry import query
 # so task retries reproduce the same split.
 _CAP_SHARDS = 64
 
+# Driver-side bound on the lang-cap id collect: 100 ids per language, so
+# this admits 1,000 languages. The collect fetches at most one row more
+# and raises past it, as connected_components does at driver_max_edges.
+_MAX_CAPPED_IDS = 100_000
+
 
 @query("pipeline_training_data", oracle=None)  # minhash/packing inside → rows-only
 def pipeline_training_data(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -218,7 +223,8 @@ def pipeline_training_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     #    consumers of the s5 flag (funnel aggregate, packing) attach it
     #    map-side from plan-embedded rows: no second corpus-frame
     #    localCheckpoint (r10's ann5), no broadcast-build job per
-    #    consumer. Same gate-bounded-collect class as the CC probe.
+    #    consumer. Same gate-bounded-collect class as the CC probe: at
+    #    most _MAX_CAPPED_IDS + 1 rows reach the driver.
     rank_key = F.md5(F.col("doc_id").cast("string"))
     w_shard = Window.partitionBy(
         "lang", F.pmod(F.xxhash64("doc_id"), F.lit(_CAP_SHARDS))
@@ -233,9 +239,15 @@ def pipeline_training_data(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", F.row_number().over(w).alias("rn"))
             .filter(F.col("rn") <= 100)
             .select("doc_id")
+            .limit(_MAX_CAPPED_IDS + 1)
             .collect()
         )
     ]
+    if len(capped_ids) > _MAX_CAPPED_IDS:
+        raise RuntimeError(
+            f"lang cap keeps more than {_MAX_CAPPED_IDS} doc ids (100 per"
+            " language): too many languages for the driver-side id list"
+        )
     capped = local_frame(
         spark,
         [(i,) for i in capped_ids],

@@ -50,6 +50,7 @@ PYTHON_EVAL_NODES = (
 PANDAS_QUERIES = sorted(
     [
         "cogroup_click_attribution",
+        "dedup_embedding_cosine",
         "dedup_simhash",
         "grouped_map_zscore",
         "http_fanout_spots",
@@ -60,8 +61,11 @@ PANDAS_QUERIES = sorted(
         "multimodal_image_decode",
         "multimodal_jpeg_decode",
         "multimodal_resize",
+        "pipeline_embedding_dedup",
+        "pipeline_embedding_dedup_lsh",
         "pipeline_pack_sequences",
         "pipeline_report_offline",
+        "pipeline_semantic_dedup",
         "pipeline_training_data",
         "simsearch_topk_exact_np",
         "simsearch_topk_pq",

@@ -323,6 +323,20 @@ def test_cc_mixed_endpoint_types_rejected_identically_on_both_paths(spark):
             connected_components(edf, driver_max_edges=gate)
 
 
+def test_cc_distributed_path_rejects_non_integral_ids_up_front(spark):
+    """The star rounds' convergence sum casts ids to decimal(38,0), so a
+    string id used to die mid-round with CAST_INVALID_INPUT. Selecting
+    the distributed path for non-integral ids is a TypeError naming the
+    id type, before any round; the driver path still takes any type."""
+    import pytest
+
+    edf = spark.createDataFrame([("a", "b"), ("b", "c")], "id_a string, id_b string")
+    with pytest.raises(TypeError, match="StringType"):
+        connected_components(edf, driver_max_edges=-1)
+    comp = {r["id"]: r["component"] for r in connected_components(edf).collect()}
+    assert comp == {"a": "a", "b": "a", "c": "a"}
+
+
 def test_cc_empty_edges_both_paths(spark):
     """Zero candidate pairs: every vertex is its own component, on both
     the driver and the distributed path."""

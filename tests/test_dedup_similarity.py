@@ -342,19 +342,14 @@ def test_sql_double_literal_roundtrips_exactly(spark):
         assert struct.pack("d", a) == struct.pack("d", b), (x, a, b)
 
 
-def test_embedding_dup_ids_spreads_pair_scoring_below_gate(spark):
-    """r11 regression pin: in the broadcast-join regime (input below
-    spark.sql.autoBroadcastJoinThreshold) the pair-scoring self-join must
-    spread its frame by the uniform synthetic key pmod(xxhash64(vec_id),
-    64·N) — on few-file corpora the scan is one or few tasks and the
-    O(Σ|block|²) scoring otherwise runs on one core (−52..57% noop A/B
-    at sf0.1 AND the multi-file sf1 clone; partitioning by the block key
-    itself measured WORSE than plain at sf1 on the 16-cell blocking —
-    hot cells pile onto few tasks). Above the gate the plain plan must
-    come back: the sort-merge join plans its own block-key exchanges
-    there and AQE skew-splitting manages hot blocks. The gate follows the
-    planner's threshold conf: disabling broadcast (-1) disables the
-    spread."""
+def test_embedding_dup_ids_plans_one_block_kernel(spark):
+    """Pair scoring is one grouped-map numpy kernel per block, fed by a
+    hash exchange on the block columns with an EXPLICIT partition count
+    (REPARTITION_BY_NUM: AQE cannot coalesce every block onto one Python
+    worker) — and no self-join, in either join regime: below the
+    broadcast threshold and with broadcast disabled (-1)."""
+    import re
+
     from rws_data_ingester_spark.operators.similarity import (
         _as_double,
         embedding_dup_ids,
@@ -366,14 +361,151 @@ def test_embedding_dup_ids_spreads_pair_scoring_below_gate(spark):
     v = scorable(e).select(
         "vec_id", "label", _as_double("embedding").alias("e")
     )
-    plan = embedding_dup_ids(v, ["label"])._jdf.queryExecution().toString()
-    assert "xxhash64(vec_id" in plan and "REPARTITION_BY_NUM" in plan, plan[:2000]
+
+    def plan():
+        return embedding_dup_ids(v, ["label"])._jdf.queryExecution().executedPlan().toString()
 
     key = "spark.sql.autoBroadcastJoinThreshold"
     saved = spark.conf.get(key)
+    plans = [plan()]
     try:
         spark.conf.set(key, "-1")
-        plan_off = embedding_dup_ids(v, ["label"])._jdf.queryExecution().toString()
+        plans.append(plan())
     finally:
         spark.conf.set(key, saved)
-    assert "REPARTITION_BY_NUM" not in plan_off, plan_off[:2000]
+    for p in plans:
+        assert p.count("FlatMapGroupsInPandas") == 1, p
+        assert len(re.findall(
+            r"Exchange hashpartitioning\(label#\d+, \d+\), REPARTITION_BY_NUM", p
+        )) == 1, p
+        assert "SortMergeJoin" not in p and "BroadcastHashJoin" not in p, p
+
+
+def _catalyst_dup_ids(v, block_cols, threshold):
+    """The reference the block kernel must reproduce: the blocked Catalyst
+    self-join with the interpreted ``_DOT`` fold. NaN cosines are excluded
+    explicitly — Spark orders NaN above every double, so the bare
+    ``>=`` would call a NaN-poisoned pair a dup; the contract is that it
+    never is (and scorable() keeps such vectors out of every pipeline)."""
+    from rws_data_ingester_spark.operators.similarity import _DOT
+
+    vn = v.withColumn("n", F.sqrt(F.expr(_DOT.format(a="e", b="e"))))
+    a, b = vn.alias("a"), vn.alias("b")
+    cond = F.col("a.vec_id") < F.col("b.vec_id")
+    for c in block_cols:
+        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
+    sim = F.expr(_DOT.format(a="a.e", b="b.e")) / F.nullif(
+        F.col("a.n") * F.col("b.n"), F.lit(0.0)
+    )
+    return a.join(b, cond).select(
+        *(F.col(f"a.{c}").alias(c) for c in block_cols),
+        F.col("b.vec_id").alias("vec_id"),
+        sim.alias("sim"),
+    ), (F.col("sim") >= threshold) & ~F.isnan("sim")
+
+
+def _ids(df) -> set:
+    return {r["vec_id"] for r in df.collect()}
+
+
+_TARGETS = [0.9] * 10 + [0.9 + 1e-10] * 2 + [0.9 - 1e-10] * 2 + [0.95] * 2
+
+
+def _planted_blocks(spark):
+    """Pairs of random 64-d vectors planted at cosine 0.9, 0.9 ± 1e-10
+    and 0.95: 160 two-vector blocks (a two-row product is where BLAS
+    dgemm drops the sequential fold order) and 4 blocks of 16 pairs, plus
+    two zero vectors. The computed cosine of a pair planted at 0.9 lands
+    a few ulps either side of the threshold, so only a kernel that folds
+    exactly like Catalyst agrees with it on every one."""
+    import numpy as np
+
+    rng = np.random.default_rng(11)
+    plants = [(f"P{i}", t) for i, t in enumerate(_TARGETS * 10)]
+    plants += [(f"B{b}", t) for b in range(4) for t in _TARGETS]
+    rows, vid = [], 0
+    for label, t in plants:
+        u = rng.normal(size=64)
+        w = rng.normal(size=64)
+        w -= (w @ u) / (u @ u) * u
+        b = t * u / np.linalg.norm(u) + np.sqrt(1 - t * t) * w / np.linalg.norm(w)
+        for x in (u, b * rng.uniform(0.5, 2.0)):
+            rows.append((vid, label, [float(y) for y in x]))
+            vid += 1
+    rows += [(vid, "B0", [0.0] * 64), (vid + 1, "B0", [0.0] * 64)]
+    rng.shuffle(rows)  # ids do not follow the planted order within a pair
+    return spark.createDataFrame(rows, "vec_id long, label string, e array<double>")
+
+
+def test_block_kernel_threshold_decisions_bit_identical_to_catalyst(spark):
+    """Bit-identity on the threshold: the dup ids equal the Catalyst
+    fold's on pairs planted at (and 1e-10 around) cosine 0.9."""
+    from rws_data_ingester_spark.operators.similarity import embedding_dup_ids
+
+    v = _planted_blocks(spark)
+    pairs, is_dup = _catalyst_dup_ids(v, ["label"], 0.9)
+    ref = _ids(pairs.filter(is_dup))
+    got = _ids(embedding_dup_ids(v, ["label"], threshold=0.9))
+    assert got == ref, (sorted(got - ref), sorted(ref - got))
+    # the boundary is really exercised: every 0.95 / +1e-10 plant is a
+    # dup, no -1e-10 plant is, and the plants at 0.9 fall on both sides
+    sure, at = 14 * 4, 14 * 10
+    assert sure < len(ref) < sure + at, len(ref)
+
+
+def test_dedup_embedding_cosine_counts_match_catalyst_on_planted_pairs(spark, tmp_path):
+    """dedup_embedding_cosine's per-label n_neardups and avg_sim, from the
+    same block kernel, equal the Catalyst fold's on the planted pairs."""
+    from rws_data_ingester_spark.functions.rounding import pround
+
+    v = _planted_blocks(spark)
+    v.withColumnRenamed("e", "embedding").write.parquet(f"{tmp_path}/embeddings.parquet")
+    got = {
+        tuple(r)
+        for r in REGISTRY["dedup_embedding_cosine"].fn(spark, str(tmp_path)).collect()
+    }
+    pairs, _ = _catalyst_dup_ids(v, ["label"], 0.9)
+    ref = {
+        tuple(r)
+        for r in pairs.groupBy("label").agg(
+            F.count(F.when(F.col("sim") >= 0.9, 1)).alias("n_neardups"),
+            (pround(F.avg("sim"), 4) + 0.0).alias("avg_sim"),
+        ).collect()
+    }
+    assert got == ref
+
+
+def test_block_kernel_dirty_blocks_match_catalyst(spark):
+    """Dirty input gets the Catalyst fold's semantics: a NULL vector, a NULL or
+    NaN element, or a length mismatch never makes a dup; a NULL block key
+    never pairs; singleton blocks, the empty frame and the one-block
+    (block_cols=[]) form all agree with the Catalyst reference."""
+    from rws_data_ingester_spark.operators.similarity import embedding_dup_ids
+
+    base = [1.0, 2.0, 3.0, 4.0]
+    near = [1.0, 2.0, 3.0, 4.1]
+    rows = [
+        (1, "a", base),
+        (2, "a", near),                        # dup of 1
+        (3, "a", None),                        # NULL vector
+        (4, "a", [1.0, None, 3.0, 4.0]),       # NULL element
+        (5, "a", [1.0, float("nan"), 3.0, 4.0]),  # NaN element
+        (6, "a", base + [0.0]),                # longer: zip_with NULL-pads
+        (7, "a", base + [0.0]),                # dup of 6 (same length)
+        (8, "a", [1.0, 2.0, 3.0]),             # shorter prefix of 1
+        (9, "a", [0.0, 0.0, 0.0, 0.0]),        # zero vector
+        (10, "a", []),                         # empty vector
+        (11, "b", base),                       # singleton block
+        (12, None, base),                      # NULL block key
+        (13, None, near),
+        (14, "c", [float("nan")] * 4),
+        (15, "c", [float("nan")] * 4),
+    ]
+    v = spark.createDataFrame(rows, "vec_id long, label string, e array<double>")
+    for frame in (v, v.filter(F.lit(False))):
+        for cols in (["label"], []):
+            pairs, is_dup = _catalyst_dup_ids(frame, cols, 0.9)
+            ref = _ids(pairs.filter(is_dup))
+            assert _ids(embedding_dup_ids(frame, cols, threshold=0.9)) == ref, cols
+    assert _ids(embedding_dup_ids(v, ["label"])) == {2, 7}
+    assert _ids(embedding_dup_ids(v, [])) == {2, 7, 11, 12, 13}

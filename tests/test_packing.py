@@ -99,3 +99,20 @@ def test_training_funnel_invariants(spark):
         assert rows[b]["n_tokens"] <= rows[a]["n_tokens"]
     assert rows["packed"]["n_tokens"] == rows["lang_capped"]["n_tokens"]
     assert 0 < rows["packed"]["n_rows"] < rows["lang_capped"]["n_rows"]
+
+
+def test_lang_cap_collect_is_bounded(spark, monkeypatch):
+    """The lang-cap ids come back to the driver through a bounded
+    collect: one id past ``_MAX_CAPPED_IDS`` raises instead of growing
+    the driver list with the language count."""
+    import pytest
+
+    from rws_data_ingester_spark.operators import training
+
+    fn = REGISTRY["pipeline_training_data"].fn
+    rows = {r["stage"]: r for r in fn(spark, SF_DIR).collect()}
+    n = rows["lang_capped"]["n_rows"]
+    assert 0 < n <= training._MAX_CAPPED_IDS
+    monkeypatch.setattr(training, "_MAX_CAPPED_IDS", n - 1)
+    with pytest.raises(RuntimeError, match=f"more than {n - 1} doc ids"):
+        fn(spark, SF_DIR)
