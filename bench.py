@@ -180,10 +180,6 @@ def measure_pass(run_once, headline, controls, n_runs, extra_runs) -> dict:
     Convergence of medians is the signal the drift endpoints actually
     use, so the last settled probe doubles as ctrl_first (no extra
     probe). `settled` is emitted so an exhausted budget is visible.
-
-    Shared by bench.py (headline set) and scripts/anchor_bench.py (the
-    non-headline anchors) so the two artifacts stay protocol-identical
-    by construction.
     """
 
     def probe_median3() -> dict[str, float]:

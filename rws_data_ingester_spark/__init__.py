@@ -46,7 +46,6 @@ from rws_data_ingester_spark.operators.dedup import (  # noqa: F401
 )
 from rws_data_ingester_spark.operators.similarity import (  # noqa: F401
     cosine_topk,
-    cosine_topk_np,
     hyperplane_signature,
     ivf_index,
 )
@@ -68,7 +67,6 @@ __all__ = [
     "shingles",
     "simhash64",
     "cosine_topk",
-    "cosine_topk_np",
     "hyperplane_signature",
     "ivf_index",
     "attach_payload",

@@ -1,26 +1,23 @@
 """Similarity search over embedding columns (SURVEY.md §2.10 [EXT]).
 
-Five tiers behind one semantic contract (top-k cosine neighbors):
-- exact Catalyst brute force (``cosine_topk``) — oracle-checkable, fine
-  up to ~10⁶×10³ pairs: the small query side is broadcast against the
-  corpus, so the corpus never shuffles;
-- exact numpy (``cosine_topk_np``) — same contract, one BLAS matmul per
-  Arrow batch of the corpus;
+Four tiers behind one semantic contract (top-k cosine neighbors):
+- exact (``cosine_topk``) — oracle-checkable: the bounded query set is
+  collected and broadcast as one matrix, and every Arrow batch of the
+  corpus is scored against it in ``mapInPandas``;
 - LSH (banded random-hyperplane signatures) — corpus rows meet a query
   only inside a shared band bucket;
 - IVF (k-means coarse quantizer) — a query probes its nearest cells only;
 - PQ (product-quantization ADC shortlist, ``vectors.simsearch_topk_pq``).
 
-Each approximate tier is a candidate generator followed by the same
-exact cosine re-rank (``_cosine_scored`` + ``_top_k``). All cosines are
-computed in float64 after an explicit cast from the float32 storage type
-so results are engine-comparable.
-
-Embedding near-dup removal (``embedding_dup_ids``) scores the pairs of a
-block (label, LSH band or k-means cell) with one numpy kernel per block
-(``_scored_blocks``), not a Catalyst self-join: the kernel folds each
-dot in ``_DOT``'s order, so its threshold decisions are bit-identical to
-the Catalyst form, without interpreting a zip_with/aggregate per pair.
+Every reported cosine is one arithmetic: float64 (cast from the float32
+storage type), each dot the left-to-right fold ``acc += a[k]*b[k]`` from
+0.0 (``_DOT``), the norm ``sqrt`` of the same fold, the cosine
+``dot / (na*nb)``, NULL where that denominator is 0. Tiles of pairs (the
+exact tier's queries × Arrow batch, the near-dup blocks of
+``embedding_dup_ids``) run it in numpy (``_tile_cosines``); listed
+candidate pairs (the LSH and IVF re-ranks) run it in Catalyst
+(``_normed`` + ``_cosine_scored``), with no Python transfer. Both give
+the same bits, so the tiers agree exactly; no BLAS sum is used.
 """
 
 from __future__ import annotations
@@ -31,7 +28,7 @@ from pyspark.sql import functions as F
 
 from rws_data_ingester_spark.catalog import Catalog
 from rws_data_ingester_spark.functions.rounding import pround
-from rws_data_ingester_spark.plans.registry import query
+from rws_data_ingester_spark.plans.registry import REGISTRY, query
 from rws_data_ingester_spark.session import local_frame, shuffle_partitions
 
 _DOT = "aggregate(zip_with({a}, {b}, (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)"
@@ -64,9 +61,10 @@ def _finite_vectors(df: DataFrame) -> DataFrame:
 # logical plan over immutable corpus files has a stable modal dimension
 # within a session; rewriting the files under the SAME path mid-session
 # would go stale (tests use fresh tmp dirs; production embedding corpora
-# are not rewritten mid-job). Bounded so a long session cannot leak.
-_MODAL_DIM_CACHE: dict[int, int | None] = {}
-_MODAL_DIM_CACHE_MAX = 256
+# are not rewritten mid-job). Lifetime: the dict lives on the session
+# object, like the catalog's table handles (catalog._HANDLES_ATTR), so
+# it is freed with its session.
+_MODAL_DIMS_ATTR = "_rws_modal_dims"
 
 
 def modal_dim(df: DataFrame) -> int | None:
@@ -77,10 +75,9 @@ def modal_dim(df: DataFrame) -> int | None:
     at 100 TB it is one long per (partition, distinct size) reduced to a
     single row, negligible next to any scoring pass, and corpora with a
     statically known dimension can pass it to scorable() directly."""
+    dims = vars(df.sparkSession).setdefault(_MODAL_DIMS_ATTR, {})
     key = df.semanticHash()
-    if key not in _MODAL_DIM_CACHE:
-        if len(_MODAL_DIM_CACHE) >= _MODAL_DIM_CACHE_MAX:
-            _MODAL_DIM_CACHE.clear()
+    if key not in dims:
         row = (
             _finite_vectors(df)
             .groupBy(F.size("embedding").alias("_dim"))
@@ -89,15 +86,15 @@ def modal_dim(df: DataFrame) -> int | None:
             .limit(1)
             .collect()
         )
-        _MODAL_DIM_CACHE[key] = row[0]["_dim"] if row else None
-    return _MODAL_DIM_CACHE[key]
+        dims[key] = row[0]["_dim"] if row else None
+    return dims[key]
 
 
 def scorable(df: DataFrame, dim: int | None = None) -> DataFrame:
     """Drop vectors no similarity tier can score or index: NULL
     embeddings, embeddings containing NaN/±Inf components, and vectors
     whose length differs from the corpus's dominant dimension. MLlib's
-    Vector rejects NaN/Inf outright, a NaN poisons every BLAS matmul it
+    Vector rejects NaN/Inf outright, a NaN poisons every cosine tile it
     touches, treating NaN >= threshold as a near-dup hit would drop good
     rows — and a mixed-dimension corpus (two embedding model versions
     landing in one table) crashes MLlib fits, numpy stacking, and
@@ -164,20 +161,101 @@ def _top_k(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
+def _fold_norms(xt: np.ndarray) -> np.ndarray:
+    """Norms of the columns of ``xt`` (row k: component k of every
+    vector): ``sqrt`` of the ``_DOT`` fold of each vector with itself."""
+    sq = np.zeros(xt.shape[1])
+    for row in xt:
+        sq += row * row
+    return np.sqrt(sq)
+
+
+def _tile_cosines(at: np.ndarray, an: np.ndarray, bt: np.ndarray, bn: np.ndarray) -> np.ndarray:
+    """The one numpy cosine: ``sims[i, j]`` of column i of ``at`` and
+    column j of ``bt`` (float64, row k = component k of every vector)
+    with their ``_fold_norms`` ``an``/``bn``, NaN (SQL NULL) where
+    ``an[i]*bn[j]`` is 0. Bit-identical to the Catalyst ``_DOT`` fold:
+    each dot is the left-to-right ``acc + a[k]*b[k]`` sum from 0.0,
+    vectorized across the pairs of the tile and never across k. A BLAS
+    matmul reassociates the sum, in a way that depends on the tile shape."""
+    dot = np.zeros((at.shape[1], bt.shape[1]))
+    prod = np.empty_like(dot)
+    for k in range(at.shape[0]):
+        np.multiply(at[k, :, None], bt[k, None, :], out=prod)
+        dot += prod
+    den = np.multiply(an[:, None], bn[None, :], out=prod)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        np.divide(dot, den, out=dot)
+    dot[den == 0.0] = np.nan
+    return dot
+
+
+# The exact tier broadcasts the query matrix and scores (queries × Arrow
+# batch) tiles, ~80 bytes per pair in the Python worker (SCALE.md): at
+# most _MAX_QUERIES + 1 query rows reach the driver.
+_MAX_QUERIES = 256
+
+
+def _collect_queries(queries: DataFrame) -> list:
+    """(vec_id, embedding) rows of a query set that is small by contract."""
+    rows = queries.select("vec_id", "embedding").limit(_MAX_QUERIES + 1).collect()
+    if len(rows) > _MAX_QUERIES:
+        raise RuntimeError(
+            f"more than {_MAX_QUERIES} query vectors for exact top-k: the"
+            " query matrix is broadcast to every task; search large query"
+            " sets on the LSH or IVF tier (simsearch_topk_lsh, simsearch_topk_ivf)"
+        )
+    return rows
+
+
 def cosine_topk(
     queries: DataFrame, corpus: DataFrame, k: int = 5
 ) -> DataFrame:
-    """Exact top-k cosine neighbors: broadcast the (small) query side and
-    score every (query, corpus) pair."""
+    """Exact top-k cosine neighbors: broadcast the collected query matrix
+    and score each Arrow batch of the corpus as one ``_tile_cosines``
+    tile in mapInPandas, self pairs dropped."""
+    import pandas as pd
+
     # Unscorable vectors (NULL / NaN / Inf / off-dimension) are dropped
     # from both sides up front — see scorable(). Both sides pin to the
     # CORPUS's modal dimension: a query from a different model version
     # must return no neighbors, not NULL-padded garbage similarities.
     d = modal_dim(corpus)
-    q = _normed(scorable(queries, d), "query_id", "qe", "qn")
-    c = _normed(scorable(corpus, d), "neighbor_id", "ce", "cn")
-    pairs = F.broadcast(q).join(c, F.col("query_id") != F.col("neighbor_id"))
-    return _top_k(_cosine_scored(pairs), k)
+    # a NULL vec_id never pairs, as under a `query_id != neighbor_id` join
+    qrows = [r for r in _collect_queries(scorable(queries, d)) if r["vec_id"] is not None]
+    if not qrows:  # no scorable queries: empty result, same schema
+        return queries.sparkSession.createDataFrame(
+            [], "query_id long, neighbor_id long, cosine_sim double, rank long"
+        )
+    qids = np.array([r["vec_id"] for r in qrows])
+    qt = np.array([r["embedding"] for r in qrows], dtype=np.float64).T.copy()
+    bq = queries.sparkSession.sparkContext.broadcast((qids, qt, _fold_norms(qt)))
+
+    def score(batches):
+        ids, qt, qn = bq.value
+        for pdf in batches:
+            if len(pdf) == 0:  # filtered-to-empty Arrow batch
+                continue
+            cids = pdf["vec_id"].to_numpy()
+            ct = np.stack(pdf["embedding"].to_numpy()).astype(np.float64).T.copy()
+            sims = _tile_cosines(qt, qn, ct, _fold_norms(ct))
+            keep = (ids[:, None] != cids[None, :]) & pdf["vec_id"].notna().to_numpy()
+            qi, ci = np.nonzero(keep)
+            yield pd.DataFrame(
+                {
+                    "query_id": ids[qi],
+                    "neighbor_id": cids[ci],
+                    # Float64 extension dtype maps NaN → NA → SQL NULL
+                    "cosine_sim": pd.array(sims[keep], dtype="Float64"),
+                }
+            )
+
+    scored = scorable(corpus, d).select("vec_id", "embedding").mapInPandas(
+        score, "query_id long, neighbor_id long, cosine_sim double"
+    )
+    # round in Spark, not numpy: np.round is half-to-even; pround matches
+    # the DuckDB oracle's rounding like every other query here
+    return _top_k(scored.withColumn("cosine_sim", pround("cosine_sim", 6)), k)
 
 
 @query(
@@ -562,75 +640,13 @@ def simsearch_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _top_k(_cosine_scored(pairs), 5)
 
 
-def cosine_topk_np(queries: DataFrame, corpus: DataFrame, k: int = 5) -> DataFrame:
-    """Exact top-k cosine, numpy path: collect the (small-by-contract)
-    query set to the driver, broadcast its normalized matrix, and score
-    each Arrow batch of the corpus with one BLAS matmul in mapInPandas.
-
-    Measured 2.5× faster than the Catalyst zip_with/aggregate chain at
-    sf0.1 (0.45s vs 1.15s warm) — dense linear algebra is the case where
-    a vectorized pandas UDF beats built-in expressions. Same contract and
-    oracle as cosine_topk; query sets too large to broadcast belong on
-    the LSH/IVF tiers instead."""
-    import pandas as pd
-
-    # Same cross-side rule as cosine_topk: both sides pinned to the
-    # corpus's modal dimension, so the query matrix stacks rectangular
-    # and the matmul never sees a ragged batch.
-    d = modal_dim(corpus)
-    qrows = scorable(queries, d).select("vec_id", "embedding").collect()
-    if not qrows:
-        # no scorable queries (empty partition replay): empty result,
-        # same schema — np.linalg.norm would choke on a 0-d matrix
-        return queries.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine_sim double, rank long"
-        )
-    qids = np.array([r["vec_id"] for r in qrows])
-    qmat = np.array([r["embedding"] for r in qrows], dtype=np.float64)
-    qlen = np.linalg.norm(qmat, axis=1, keepdims=True)
-    qnorm = qmat / np.maximum(qlen, 1e-12)
-    # zero-norm query → cosine undefined → NULL, matching the Catalyst
-    # path's nullif guard (not a clamped 0)
-    qnorm[qlen.ravel() == 0.0] = np.nan
-    bq = queries.sparkSession.sparkContext.broadcast((qids, qnorm))
-
-    def score(batches):
-        ids, qn = bq.value
-        for pdf in batches:
-            if len(pdf) == 0:  # filtered-to-empty Arrow batch
-                continue
-            cmat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            clen = np.linalg.norm(cmat, axis=1, keepdims=True)
-            cn = cmat / np.maximum(clen, 1e-12)
-            cn[clen.ravel() == 0.0] = np.nan
-            sims = qn @ cn.T
-            nb = sims.shape[1]
-            flat = sims.ravel()
-            out = pd.DataFrame(
-                {
-                    "query_id": np.repeat(ids, nb),
-                    "neighbor_id": np.tile(pdf["vec_id"].to_numpy(), len(ids)),
-                    # Float64 extension dtype maps NaN → NA → SQL NULL
-                    "cosine_sim": pd.array(flat, dtype="Float64"),
-                }
-            )
-            yield out[out.query_id != out.neighbor_id]
-
-    scored = scorable(corpus, d).select("vec_id", "embedding").mapInPandas(
-        score, "query_id long, neighbor_id long, cosine_sim double"
-    )
-    # round in Spark, not numpy: np.round is half-to-even; F.round matches
-    # the DuckDB oracle's rounding like every other query here
-    return _top_k(scored.withColumn("cosine_sim", pround("cosine_sim", 6)), k)
-
-
-@query("simsearch_topk_exact_np", oracle=None)
+@query("simsearch_topk_exact_np", oracle=REGISTRY["simsearch_topk_exact"].oracle)
 def simsearch_topk_exact_np(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Numpy-path exact top-k. Registered rows-only; the unit test pins it
-    row-identical to the oracle-checked Catalyst form, which is a stronger
-    statement than an independent oracle pass."""
+    """The exact top-k under its second registered name (the bench
+    headline and the benchmark's curation list time it by name): the same
+    ``cosine_topk`` and the same oracle as simsearch_topk_exact."""
     e = Catalog(spark, sf_dir).embeddings
-    return cosine_topk_np(e.filter(F.col("vec_id") < 10), e, k=5)
+    return cosine_topk(e.filter(F.col("vec_id") < 10), e, k=5)
 
 
 # Rows of a block scored per numpy step: a step holds the block's (m, d)
@@ -643,31 +659,13 @@ def _block_cosines(x: np.ndarray):
     """Cosines of one block of equal-length float64 vectors, as
     ``(r0, sims)`` row tiles: ``sims[i, j]`` is the cosine of rows r0+i
     and r0+j (columns start at r0; earlier columns are earlier rows,
-    already scored), NaN where the denominator is zero (SQL NULL).
-
-    Bit-identical to the Catalyst ``_DOT`` fold: the dot is the same
-    left-to-right ``acc + x[k]*y[k]`` sum from 0.0, vectorized across the
-    pairs of a tile and never across k; the norm is ``sqrt`` of that fold
-    of ``x*x``; the cosine is ``dot / (na*nb)``. A BLAS matmul
-    reassociates the sum and flips pairs that sit on the threshold."""
-    m, d = x.shape
+    already scored), NaN where the denominator is zero (SQL NULL) — the
+    ``_tile_cosines`` fold, so bit-identical to the Catalyst ``_DOT``."""
     xt = np.ascontiguousarray(x.T)  # row k: component k of every vector
-    sq = np.zeros(m)
-    for k in range(d):
-        sq += xt[k] * xt[k]
-    nrm = np.sqrt(sq)
-    for r0 in range(0, m, _TILE_ROWS):
-        r1 = min(r0 + _TILE_ROWS, m)
-        dot = np.zeros((r1 - r0, m - r0))
-        prod = np.empty_like(dot)
-        for k in range(d):
-            np.multiply(xt[k, r0:r1, None], xt[k, None, r0:], out=prod)
-            dot += prod
-        den = np.multiply(nrm[r0:r1, None], nrm[None, r0:], out=prod)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sims = dot / den
-        sims[den == 0.0] = np.nan
-        yield r0, sims
+    nrm = _fold_norms(xt)
+    for r0 in range(0, len(x), _TILE_ROWS):
+        r1 = min(r0 + _TILE_ROWS, len(x))
+        yield r0, _tile_cosines(xt[:, r0:r1], nrm[r0:r1], xt[:, r0:], nrm[r0:])
 
 
 def _score_block(ids: np.ndarray, vecs: np.ndarray, threshold: float):

@@ -28,7 +28,12 @@ from pyspark.sql import functions as F
 
 from rws_data_ingester_spark.catalog import Catalog
 from rws_data_ingester_spark.functions.rounding import pround
-from rws_data_ingester_spark.operators.similarity import _top_k, cosine_topk, scorable
+from rws_data_ingester_spark.operators.similarity import (
+    _collect_queries,
+    _top_k,
+    cosine_topk,
+    scorable,
+)
 from rws_data_ingester_spark.plans.registry import query
 
 
@@ -123,7 +128,7 @@ def pq_encode(emb: DataFrame, codebook: np.ndarray) -> DataFrame:
     """Encode every vector as m uint8 codes (nearest centroid per
     subspace). Vectorized numpy over Arrow batches — the dense-argmin
     inner loop is the BLAS-shaped case where mapInPandas beats Catalyst
-    expressions (see cosine_topk_np). Output: (vec_id, codes array<int>);
+    expressions. Output: (vec_id, codes array<int>);
     at scale this is the only copy of the corpus the ANN scan reads."""
     import pandas as pd
 
@@ -174,11 +179,7 @@ def simsearch_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NaN poisons codebooks; see similarity.scorable().
     e = scorable(Catalog(spark, sf_dir).embeddings)
     codebook = pq_train(e)
-    qrows = (
-        e.filter(F.col("vec_id") < 10).select("vec_id", "embedding").collect()
-        if codebook is not None
-        else []
-    )
+    qrows = _collect_queries(e.filter(F.col("vec_id") < 10)) if codebook is not None else []
     if not qrows:
         # empty/unscorable corpus or no queries: empty result, same schema
         return spark.createDataFrame(

@@ -67,6 +67,7 @@ PANDAS_QUERIES = sorted(
         "pipeline_report_offline",
         "pipeline_semantic_dedup",
         "pipeline_training_data",
+        "simsearch_topk_exact",
         "simsearch_topk_exact_np",
         "simsearch_topk_pq",
         "udf_scalar_vowels",

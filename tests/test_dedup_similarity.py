@@ -143,12 +143,121 @@ def test_ivf_topk_recall_vs_exact(spark):
     assert recall >= 0.3, f"degenerate IVF recall {recall}"
 
 
+def _catalyst_topk(queries, corpus, k):
+    """Exact top-k as the Catalyst fold: broadcast nested-loop join on
+    query_id != neighbor_id, the ``_DOT`` cosine with a nullif guard,
+    pround to 6 places, and the (cosine desc, neighbor_id) rank."""
+    from pyspark.sql import Window
+
+    from rws_data_ingester_spark.functions.rounding import pround
+    from rws_data_ingester_spark.operators.similarity import _DOT
+
+    def side(df, i, e, n):
+        v = df.select(
+            F.col("vec_id").alias(i),
+            F.expr("transform(embedding, x -> cast(x as double))").alias(e),
+        )
+        return v.withColumn(n, F.sqrt(F.expr(_DOT.format(a=e, b=e))))
+
+    pairs = F.broadcast(side(queries, "query_id", "qe", "qn")).join(
+        side(corpus, "neighbor_id", "ce", "cn"), F.col("query_id") != F.col("neighbor_id")
+    )
+    raw = F.expr(_DOT.format(a="qe", b="ce")) / F.nullif(F.col("qn") * F.col("cn"), F.lit(0.0))
+    scored = pairs.select("query_id", "neighbor_id", raw.alias("_raw")).select(
+        "query_id", "neighbor_id", pround("_raw", 6).alias("cosine_sim")
+    )
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), "neighbor_id")
+    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
+        F.col("rank") <= k
+    )
+
+
 def test_numpy_topk_identical_to_catalyst_topk(spark):
-    """The BLAS-matmul path must be row-identical to the Catalyst path
-    (same float64 math, same rounding, same tie-break)."""
-    a = REGISTRY["simsearch_topk_exact"].fn(spark, SF_DIR)
-    b = REGISTRY["simsearch_topk_exact_np"].fn(spark, SF_DIR)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+    """cosine_topk's numpy scorer returns the Catalyst fold's rows
+    exactly. Each query's partner is planted at cosine 0.9000005, a
+    rounding midpoint at 6 places, so the computed cosine rounds up or
+    down on its last bits and only the same fold agrees on every pair.
+    Exact copies of a partner plant ties that the neighbor_id tie-break
+    decides at the k = 2 cut, a zero query and a zero corpus vector
+    give NULL cosines that rank last, and NULL vec_ids never pair."""
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    rows, vid, qids = [], 0, []
+    for i in range(30):
+        u = rng.normal(size=64)
+        w = rng.normal(size=64)
+        w -= (w @ u) / (u @ u) * u
+        t = 0.9000005
+        b = t * u / np.linalg.norm(u) + np.sqrt(1 - t * t) * w / np.linalg.norm(w)
+        copies = 1 + i % 3  # partners at an exactly tied cosine
+        for x in [u] + [b * rng.uniform(0.5, 2.0)] * copies:
+            rows.append((vid, [float(y) for y in x]))
+            vid += 1
+        qids.append(vid - copies - 1)
+    rows += [(vid, [0.0] * 64), (vid + 1, [0.0] * 64), (None, rows[0][1])]
+    qids.append(vid)
+    rng.shuffle(rows)  # rows arrive out of vec_id order
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    queries = corpus.filter(F.col("vec_id").isin(qids) | F.col("vec_id").isNull())
+    for k in (2, len(rows)):
+        got = sorted(map(tuple, cosine_topk(queries, corpus, k=k).collect()))
+        ref = sorted(map(tuple, _catalyst_topk(queries, corpus, k).collect()))
+        assert got == ref, (k, sorted(set(got) ^ set(ref))[:6])
+    assert len(got) == len(qids) * (len(rows) - 2)
+    assert {r[2] for r in got if r[0] == vid} == {None}
+
+
+def test_tile_cosines_bit_identical_to_python_fold():
+    """The one numpy cosine equals a pure-Python left-to-right fold bit
+    for bit on every tile shape. A BLAS matmul's summation order depends
+    on the shape and the memory layout: ``a @ b.T`` differs from the fold
+    on most entries of the 1×n and n×1 tiles, ``at.T @ bt`` on the 7×7."""
+    import math
+
+    import numpy as np
+
+    from rws_data_ingester_spark.operators.similarity import _fold_norms, _tile_cosines
+
+    def fold(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc += x * y
+        return acc
+
+    rng = np.random.default_rng(5)
+    for r, c in ((1, 50), (50, 1), (10, 200), (7, 7)):
+        a, b = rng.normal(size=(r, 64)), rng.normal(size=(c, 64))
+        if r > 1:
+            a[-1] = 0.0  # a zero vector: a NaN row
+        at, bt = np.ascontiguousarray(a.T), np.ascontiguousarray(b.T)
+        sims = _tile_cosines(at, _fold_norms(at), bt, _fold_norms(bt))
+        for i, x in enumerate(a.tolist()):
+            for j, y in enumerate(b.tolist()):
+                den = math.sqrt(fold(x, x)) * math.sqrt(fold(y, y))
+                want = fold(x, y) / den if den else math.nan
+                got = float(sims[i, j])
+                assert got.hex() == want.hex(), ((r, c), i, j, got, want)
+
+
+def test_exact_query_collect_is_bounded(spark, monkeypatch):
+    """cosine_topk and the PQ tier collect their queries through one
+    bounded helper: past _MAX_QUERIES they raise instead of pulling an
+    unbounded query set to the driver."""
+    import pytest
+
+    from rws_data_ingester_spark.operators import similarity
+
+    e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    queries = e.filter(F.col("vec_id") < 10)
+    n = queries.count()
+    monkeypatch.setattr(similarity, "_MAX_QUERIES", n - 1)
+    with pytest.raises(RuntimeError, match="LSH or IVF tier"):
+        cosine_topk(queries, e)
+    with pytest.raises(RuntimeError, match="LSH or IVF tier"):
+        REGISTRY["simsearch_topk_pq"].fn(spark, SF_DIR)
+    monkeypatch.setattr(similarity, "_MAX_QUERIES", n)
+    assert cosine_topk(queries, e).count() == 5 * n
 
 
 def test_resize_preserves_feature_mass(spark):
@@ -175,14 +284,11 @@ def test_resize_preserves_feature_mass(spark):
 
 
 def test_cosine_zero_vector_is_null_cross_engine(spark, tmp_path):
-    """An all-zero embedding has no defined cosine: Spark's guarded
-    divide and DuckDB's nullif must both yield NULL (not inf/NaN/0), on
-    the Catalyst path and the numpy path alike — and the NULL must sort
-    last so the zero vector never enters anyone's top-k."""
+    """An all-zero embedding has no defined cosine: the exact scorer and
+    DuckDB's nullif must both yield NULL (not inf/NaN/0) — and the NULL
+    must sort last so the zero vector never enters anyone's top-k."""
     import duckdb
     import numpy as np
-
-    from rws_data_ingester_spark.operators.similarity import cosine_topk, cosine_topk_np
 
     rng = np.random.RandomState(7)
     rows = [(i, [float(x) for x in rng.randn(8)], "a") for i in range(6)]
@@ -193,15 +299,14 @@ def test_cosine_zero_vector_is_null_cross_engine(spark, tmp_path):
     df.write.mode("overwrite").parquet(f"{tmp_path}/embeddings.parquet")
     emb = spark.read.parquet(f"{tmp_path}/embeddings.parquet")
 
-    for fn in (cosine_topk, cosine_topk_np):
-        out = fn(emb.filter(F.col("vec_id").isin(0, 6)), emb, k=3).collect()
-        by_q = {}
-        for r in out:
-            by_q.setdefault(r["query_id"], []).append(r)
-        # zero vector never appears as a neighbor of a real query
-        assert all(r["neighbor_id"] != 6 for r in by_q[0]), (fn.__name__, by_q[0])
-        # the zero query's sims are all NULL (cosine undefined)
-        assert all(r["cosine_sim"] is None for r in by_q[6]), (fn.__name__, by_q[6])
+    out = cosine_topk(emb.filter(F.col("vec_id").isin(0, 6)), emb, k=3).collect()
+    by_q = {}
+    for r in out:
+        by_q.setdefault(r["query_id"], []).append(r)
+    # zero vector never appears as a neighbor of a real query
+    assert all(r["neighbor_id"] != 6 for r in by_q[0]), by_q[0]
+    # the zero query's sims are all NULL (cosine undefined)
+    assert all(r["cosine_sim"] is None for r in by_q[6]), by_q[6]
 
     con = duckdb.connect()
     con.execute(

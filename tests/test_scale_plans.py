@@ -451,14 +451,15 @@ def test_pround_bind_projection_survives_optimization(spark):
     projection and round the bound column — pround references its operand
     4x, so if CollapseProject ever starts inlining a non-cheap
     multi-referenced alias (a Spark-upgrade behavior change), the HOF
-    cosine chain would silently re-evaluate per reference (measured 2.0 s
-    vs 0.73 s at sf0.1). Results would stay IDENTICAL, so only this plan
+    cosine chain of the LSH/IVF re-rank would silently re-evaluate per
+    reference (measured 2.0 s vs 0.73 s at sf0.1 on the same chain in an
+    all-pairs scorer). Results would stay IDENTICAL, so only this plan
     assertion can catch the regression: the optimized plan must still
     carry the bound intermediate column."""
     from tests.conftest import SF_DIR
     from rws_data_ingester_spark.plans import REGISTRY
 
-    df = REGISTRY["simsearch_topk_exact"].fn(spark, SF_DIR)
+    df = REGISTRY["simsearch_topk_lsh"].fn(spark, SF_DIR)
     optimized = df._jdf.queryExecution().optimizedPlan().toString()
     assert "_raw_sim" in optimized, (
         "the raw-cosine bind was inlined away — pround's operand will "
@@ -521,20 +522,23 @@ def test_window_running_plan_is_single_window_single_shuffle(spark):
 
 
 def test_simsearch_np_plan_has_partial_group_limit_and_pushed_filter(spark):
-    """BLAS twin: one MapInPandas scorer over a pruned scan with the
-    IsNotNull pushed to parquet, then map-side WindowGroupLimit (Partial)
-    before the single Exchange and the Final limit — top-k never shuffles
-    more than k rows per query per partition."""
-    df = REGISTRY["simsearch_topk_exact_np"].fn(spark, SF_DIR)
-    plan = _plan(df)
-    assert plan.count("MapInPandas") == 1
-    assert "WindowGroupLimit" in plan
-    partial_before_exchange = plan.index("Exchange hashpartitioning") < plan.rindex(
-        "WindowGroupLimit"
-    )
-    assert partial_before_exchange, "map-side Partial WindowGroupLimit missing"
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "PushedFilters: [IsNotNull(embedding)]" in _formatted(df)
+    """Both registered names of the exact tier: one MapInPandas scorer
+    over a pruned scan with the IsNotNull pushed to parquet, no nested
+    loop join, then map-side WindowGroupLimit (Partial) before the single
+    Exchange and the Final limit — top-k never shuffles more than k rows
+    per query per partition."""
+    for name in ("simsearch_topk_exact", "simsearch_topk_exact_np"):
+        df = REGISTRY[name].fn(spark, SF_DIR)
+        plan = _plan(df)
+        assert plan.count("MapInPandas") == 1, name
+        assert "NestedLoopJoin" not in plan, name
+        assert "WindowGroupLimit" in plan, name
+        partial_before_exchange = plan.index("Exchange hashpartitioning") < plan.rindex(
+            "WindowGroupLimit"
+        )
+        assert partial_before_exchange, f"{name}: map-side Partial WindowGroupLimit missing"
+        assert plan.count("Exchange hashpartitioning") == 1, name
+        assert "PushedFilters: [IsNotNull(embedding)]" in _formatted(df), name
 
 
 def test_multiset_fingerprint_detects_loss_dup_and_mutation(spark):

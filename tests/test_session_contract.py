@@ -105,3 +105,30 @@ def test_table_handle_cache_is_freed_with_its_session(spark):
     gc.collect()
     alive = sum(r() is not None for r in refs)
     assert alive == 0, f"{alive} of 5 dropped sessions still alive"
+
+
+def test_modal_dim_cache_is_freed_with_its_session(spark):
+    """modal_dim's per-corpus cache lives on the session, like the table
+    handles: a second call on the same session is a hit (no new entry),
+    and sessions that computed a modal dimension and are then dropped
+    must be garbage-collectable."""
+    import gc
+    import weakref
+
+    from pyspark.sql.session import _monkey_patch_RDD
+
+    from rws_data_ingester_spark.operators.similarity import _MODAL_DIMS_ATTR, modal_dim
+
+    refs = []
+    for _ in range(5):
+        s = spark.newSession()
+        e = load_table(s, SF_DIR, "embeddings")
+        assert modal_dim(e) == modal_dim(e) == 64
+        assert vars(s)[_MODAL_DIMS_ATTR] == {e.semanticHash(): 64}
+        refs.append(weakref.ref(s))
+    del s, e
+    # see test_table_handle_cache_is_freed_with_its_session
+    _monkey_patch_RDD(spark)
+    gc.collect()
+    alive = sum(r() is not None for r in refs)
+    assert alive == 0, f"{alive} of 5 dropped sessions still alive"
