@@ -9,15 +9,15 @@ Four tiers behind one semantic contract (top-k cosine neighbors):
 - IVF (k-means coarse quantizer) — a query probes its nearest cells only;
 - PQ (product-quantization ADC shortlist, ``vectors.simsearch_topk_pq``).
 
-Every reported cosine is one arithmetic: float64 (cast from the float32
-storage type), each dot the left-to-right fold ``acc += a[k]*b[k]`` from
-0.0 (``_DOT``), the norm ``sqrt`` of the same fold, the cosine
-``dot / (na*nb)``, NULL where that denominator is 0. Tiles of pairs (the
-exact tier's queries × Arrow batch, the near-dup blocks of
-``embedding_dup_ids``) run it in numpy (``_tile_cosines``); listed
-candidate pairs (the LSH and IVF re-ranks) run it in Catalyst
-(``_normed`` + ``_cosine_scored``), with no Python transfer. Both give
-the same bits, so the tiers agree exactly; no BLAS sum is used.
+Every reported cosine is one arithmetic, ``_tile_cosines`` in numpy:
+float64 (cast from the float32 storage type), each dot the left-to-right
+fold ``acc += a[k]*b[k]`` from 0.0, the norm ``sqrt`` of the same fold,
+the cosine ``dot / (na*nb)``, NULL where that denominator is 0. The
+approximate tiers are candidate filters in front of one refine step,
+``_cosine_scored``, which scores the listed pairs of an Arrow batch
+together; the exact tier scores queries × Arrow batch tiles, the
+near-dup blocks of ``embedding_dup_ids`` row tiles of a block. No BLAS
+sum is used, so every tier gives the same bits for the same pair.
 """
 
 from __future__ import annotations
@@ -30,8 +30,6 @@ from rws_data_ingester_spark.catalog import Catalog
 from rws_data_ingester_spark.functions.rounding import pround
 from rws_data_ingester_spark.plans.registry import REGISTRY, query
 from rws_data_ingester_spark.session import local_frame, shuffle_partitions
-
-_DOT = "aggregate(zip_with({a}, {b}, (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)"
 
 
 def _as_double(col: str) -> F.Column:
@@ -117,40 +115,6 @@ def scorable(df: DataFrame, dim: int | None = None) -> DataFrame:
     return df.filter(F.expr(f"{_FINITE_PRED} AND size(embedding) = {int(d)}"))
 
 
-def _normed(df: DataFrame, id_name: str, e_name: str, n_name: str, **extra: F.Column) -> DataFrame:
-    """One side of a cosine join: (id, float64 vector, *extra, norm).
-
-    The norm is folded ONCE PER ROW before the join (O(n) folds), not per
-    scored pair (O(n·q) folds): the per-pair form re-ran two of the three
-    zip_with/aggregate chains for every combination — hoisting them is
-    bit-identical (same IEEE ops, same order, evaluated earlier) and read
-    0.72 s → 0.46 s at sf0.1 (r10 A/B)."""
-    return df.select(
-        F.col("vec_id").alias(id_name),
-        _as_double("embedding").alias(e_name),
-        *(c.alias(name) for name, c in extra.items()),
-    ).select(
-        id_name, e_name, *extra, F.sqrt(F.expr(_DOT.format(a=e_name, b=e_name))).alias(n_name)
-    )
-
-
-def _cosine_scored(pairs: DataFrame) -> DataFrame:
-    """(query_id, neighbor_id, cosine_sim) from joined (qe, qn) × (ce, cn)
-    sides, cosine rounded to 6 places.
-
-    Bind the raw cosine once, round the bound column: pround references
-    its operand 4×, and re-evaluating the HOF dot chain per reference
-    quadruples the hot loop (2.0 s → 0.73 s at sf0.1). CollapseProject
-    keeps the projections apart — a non-cheap expr referenced more than
-    once is never inlined."""
-    dot = F.expr(_DOT.format(a="qe", b="ce"))
-    return pairs.select(
-        "query_id",
-        "neighbor_id",
-        (dot / F.nullif(F.col("qn") * F.col("cn"), F.lit(0.0))).alias("_raw_sim"),
-    ).select("query_id", "neighbor_id", pround("_raw_sim", 6).alias("cosine_sim"))
-
-
 def _top_k(scored: DataFrame, k: int) -> DataFrame:
     """Keep the k best neighbors per query (cosine desc, neighbor_id as
     the total tiebreak) via a rank-limited window — Catalyst pushes the
@@ -163,7 +127,7 @@ def _top_k(scored: DataFrame, k: int) -> DataFrame:
 
 def _fold_norms(xt: np.ndarray) -> np.ndarray:
     """Norms of the columns of ``xt`` (row k: component k of every
-    vector): ``sqrt`` of the ``_DOT`` fold of each vector with itself."""
+    vector): ``sqrt`` of the dot fold of each vector with itself."""
     sq = np.zeros(xt.shape[1])
     for row in xt:
         sq += row * row
@@ -171,23 +135,55 @@ def _fold_norms(xt: np.ndarray) -> np.ndarray:
 
 
 def _tile_cosines(at: np.ndarray, an: np.ndarray, bt: np.ndarray, bn: np.ndarray) -> np.ndarray:
-    """The one numpy cosine: ``sims[i, j]`` of column i of ``at`` and
-    column j of ``bt`` (float64, row k = component k of every vector)
-    with their ``_fold_norms`` ``an``/``bn``, NaN (SQL NULL) where
-    ``an[i]*bn[j]`` is 0. Bit-identical to the Catalyst ``_DOT`` fold:
-    each dot is the left-to-right ``acc + a[k]*b[k]`` sum from 0.0,
-    vectorized across the pairs of the tile and never across k. A BLAS
-    matmul reassociates the sum, in a way that depends on the tile shape."""
-    dot = np.zeros((at.shape[1], bt.shape[1]))
+    """The one numpy cosine of ``at`` and ``bt`` (float64, axis 0 =
+    component k) with their ``_fold_norms`` ``an``/``bn``, broadcast over
+    the other axes: ``at[:, :, None]`` with a (d, m) ``bt`` is the n×m
+    tile, two (d, n) operands are n listed pairs. NaN (SQL NULL) where
+    ``an*bn`` is 0. Each dot is the left-to-right ``acc + a[k]*b[k]`` sum
+    from 0.0, vectorized across pairs and never across k: bit-identical
+    to the SQL ``aggregate(zip_with(…))`` fold on any shape, where a BLAS
+    matmul reassociates the sum in a shape-dependent way."""
+    dot = np.zeros(np.broadcast_shapes(at.shape[1:], bt.shape[1:]))
     prod = np.empty_like(dot)
-    for k in range(at.shape[0]):
-        np.multiply(at[k, :, None], bt[k, None, :], out=prod)
+    for ak, bk in zip(at, bt):
+        np.multiply(ak, bk, out=prod)
         dot += prod
-    den = np.multiply(an[:, None], bn[None, :], out=prod)
+    den = np.multiply(an, bn, out=prod)
     with np.errstate(divide="ignore", invalid="ignore"):
         np.divide(dot, den, out=dot)
     dot[den == 0.0] = np.nan
     return dot
+
+
+def _cosine_scored(pairs: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, cosine_sim) of listed candidate pairs, each
+    carrying both float64 vectors (query_id, qe, neighbor_id, ce), cosine
+    rounded to 6 places: the refine step of the approximate tiers (all
+    vectors scorable(), of one dimension). An Arrow batch is one
+    ``_tile_cosines`` call however many queries it mixes, and the query
+    vector rides on the pair row, so no query set reaches the driver."""
+    import pyarrow as pa
+
+    def components(col):  # list column of n d-vectors → (d, n), no per-row arrays
+        return np.ascontiguousarray(col.flatten().to_numpy().reshape(len(col), -1).T)
+
+    def score(batches):
+        for b in batches:
+            if b.num_rows == 0:  # filtered-to-empty Arrow batch
+                continue
+            qt, ct = components(b.column("qe")), components(b.column("ce"))
+            sims = _tile_cosines(qt, _fold_norms(qt), ct, _fold_norms(ct))
+            yield pa.RecordBatch.from_arrays(
+                # from_pandas maps NaN → SQL NULL
+                [b.column("query_id"), b.column("neighbor_id"), pa.array(sims, from_pandas=True)],
+                names=["query_id", "neighbor_id", "cosine_sim"],
+            )
+
+    scored = pairs.select("query_id", "qe", "neighbor_id", "ce").mapInArrow(
+        score, "query_id long, neighbor_id long, cosine_sim double"
+    )
+    # rounded in Spark, as in cosine_topk
+    return scored.withColumn("cosine_sim", pround("cosine_sim", 6))
 
 
 # The exact tier broadcasts the query matrix and scores (queries × Arrow
@@ -238,7 +234,7 @@ def cosine_topk(
                 continue
             cids = pdf["vec_id"].to_numpy()
             ct = np.stack(pdf["embedding"].to_numpy()).astype(np.float64).T.copy()
-            sims = _tile_cosines(qt, qn, ct, _fold_norms(ct))
+            sims = _tile_cosines(qt[:, :, None], qn[:, None], ct, _fold_norms(ct))
             keep = (ids[:, None] != cids[None, :]) & pdf["vec_id"].notna().to_numpy()
             qi, ci = np.nonzero(keep)
             yield pd.DataFrame(
@@ -471,8 +467,8 @@ def simsearch_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    q = _normed(e.filter(F.col("vec_id") < 10), "query_id", "qe", "qn")
-    c = _normed(e, "neighbor_id", "ce", "cn")
+    c = e.select(F.col("vec_id").alias("neighbor_id"), _as_double("embedding").alias("ce"))
+    q = c.filter(F.col("neighbor_id") < 10).toDF("query_id", "qe")
     pairs = cands.join(c, "neighbor_id").join(F.broadcast(q), "query_id")
     return _top_k(_cosine_scored(pairs), 5)
 
@@ -625,14 +621,12 @@ def simsearch_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("probe_rank") <= nprobe)
         .select("query_id", "qe", "centroid_id")
     )
-    c = _normed(
-        e.join(assignments, "vec_id"), "neighbor_id", "ce", "cn",
-        c_centroid_id=F.col("centroid_id"),
+    c = e.join(assignments, "vec_id").select(
+        F.col("vec_id").alias("neighbor_id"),
+        _as_double("embedding").alias("ce"),
+        F.col("centroid_id").alias("c_centroid_id"),
     )
-    qn = F.sqrt(F.expr(_DOT.format(a="qe", b="qe")))
-    pairs = F.broadcast(
-        probes.select("query_id", "qe", "centroid_id", qn.alias("qn"))
-    ).join(
+    pairs = F.broadcast(probes).join(
         c,
         (F.col("centroid_id") == F.col("c_centroid_id"))
         & (F.col("query_id") != F.col("neighbor_id")),
@@ -660,12 +654,12 @@ def _block_cosines(x: np.ndarray):
     ``(r0, sims)`` row tiles: ``sims[i, j]`` is the cosine of rows r0+i
     and r0+j (columns start at r0; earlier columns are earlier rows,
     already scored), NaN where the denominator is zero (SQL NULL) — the
-    ``_tile_cosines`` fold, so bit-identical to the Catalyst ``_DOT``."""
+    ``_tile_cosines`` fold."""
     xt = np.ascontiguousarray(x.T)  # row k: component k of every vector
     nrm = _fold_norms(xt)
     for r0 in range(0, len(x), _TILE_ROWS):
         r1 = min(r0 + _TILE_ROWS, len(x))
-        yield r0, _tile_cosines(xt[:, r0:r1], nrm[r0:r1], xt[:, r0:], nrm[r0:])
+        yield r0, _tile_cosines(xt[:, r0:r1, None], nrm[r0:r1, None], xt[:, r0:], nrm[r0:])
 
 
 def _score_block(ids: np.ndarray, vecs: np.ndarray, threshold: float):
@@ -673,7 +667,7 @@ def _score_block(ids: np.ndarray, vecs: np.ndarray, threshold: float):
     a.vec_id < b.vec_id → (dup ids, number of pairs with cosine ≥
     threshold, sum and count of the defined cosines).
 
-    Dirty input keeps the ``_DOT`` fold's semantics: vectors of
+    Dirty input keeps the SQL fold's semantics: vectors of
     different lengths never pair (zip_with NULL-pads, so their cosine is
     NULL); a NULL vector never pairs; a NULL or NaN element (Arrow hands
     NULL elements over as NaN) makes every cosine it touches NaN, which

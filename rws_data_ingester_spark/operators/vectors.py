@@ -14,7 +14,7 @@ Scale design:
   the standard IVF-PQ serving shape (Jégou et al., "Product Quantization
   for Nearest Neighbor Search", TPAMI 2011). At 100 TB only the M-byte
   codes sit in the scan path; full vectors are fetched just for the
-  shortlist re-rank (a semi-join by id).
+  shortlist re-rank (a join by id).
 
 The reference (arianium/rws_data_ingester) has no vector surface at all;
 this is mandated [EXT] scope.
@@ -29,12 +29,14 @@ from pyspark.sql import functions as F
 from rws_data_ingester_spark.catalog import Catalog
 from rws_data_ingester_spark.functions.rounding import pround
 from rws_data_ingester_spark.operators.similarity import (
+    _as_double,
     _collect_queries,
+    _cosine_scored,
     _top_k,
-    cosine_topk,
     scorable,
 )
 from rws_data_ingester_spark.plans.registry import query
+from rws_data_ingester_spark.session import local_frame
 
 
 @query(
@@ -166,8 +168,9 @@ def simsearch_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     2. per query, precompute the (m, k) lookup table of subspace
        distances, broadcast it, and score every corpus row with m table
        adds (no vector math in the scan);
-    3. shortlist the 50 closest by ADC, fetch their real vectors by id
-       (semi-join), exact-cosine re-rank to the final top 5.
+    3. shortlist the 50 closest by ADC per query, then re-rank each
+       query's own shortlist with the exact refine (``_cosine_scored``)
+       to the final top 5.
 
     Recall vs the exact path is asserted in tests/test_dedup_similarity.py.
     Schema matches simsearch_topk_exact."""
@@ -230,13 +233,9 @@ def simsearch_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("adc_rank") <= shortlist_n)
         .select("query_id", "neighbor_id")
     )
-    # exact re-rank: fetch real vectors for the shortlist only
-    cand = e.join(
-        shortlist.select(F.col("neighbor_id").alias("vec_id")).distinct(),
-        "vec_id",
-        "left_semi",
-    )
-    exact = cosine_topk(e.filter(F.col("vec_id") < 10), cand, k=shortlist_n).select(
-        "query_id", "neighbor_id", "cosine_sim"
-    )
-    return _top_k(shortlist.join(exact, ["query_id", "neighbor_id"]), k_final)
+    # query vectors come from the rows collected above, not a second collect
+    qs = [(r["vec_id"], list(r["embedding"])) for r in qrows]
+    q = local_frame(spark, qs, "query_id long, qe array<double>")
+    c = e.select(F.col("vec_id").alias("neighbor_id"), _as_double("embedding").alias("ce"))
+    pairs = shortlist.join(c, "neighbor_id").join(F.broadcast(q), "query_id")
+    return _top_k(_cosine_scored(pairs), k_final)

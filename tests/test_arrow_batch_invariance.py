@@ -69,6 +69,8 @@ PANDAS_QUERIES = sorted(
         "pipeline_training_data",
         "simsearch_topk_exact",
         "simsearch_topk_exact_np",
+        "simsearch_topk_ivf",
+        "simsearch_topk_lsh",
         "simsearch_topk_pq",
         "udf_scalar_vowels",
         "udf_sql_registered",

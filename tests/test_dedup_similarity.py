@@ -143,26 +143,30 @@ def test_ivf_topk_recall_vs_exact(spark):
     assert recall >= 0.3, f"degenerate IVF recall {recall}"
 
 
+# The Catalyst reference dot: a left-to-right fold from 0.0, the order
+# every numpy cosine must reproduce bit for bit.
+_FOLD = "aggregate(zip_with({a}, {b}, (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)"
+
+
 def _catalyst_topk(queries, corpus, k):
     """Exact top-k as the Catalyst fold: broadcast nested-loop join on
-    query_id != neighbor_id, the ``_DOT`` cosine with a nullif guard,
+    query_id != neighbor_id, the ``_FOLD`` cosine with a nullif guard,
     pround to 6 places, and the (cosine desc, neighbor_id) rank."""
     from pyspark.sql import Window
 
     from rws_data_ingester_spark.functions.rounding import pround
-    from rws_data_ingester_spark.operators.similarity import _DOT
 
     def side(df, i, e, n):
         v = df.select(
             F.col("vec_id").alias(i),
             F.expr("transform(embedding, x -> cast(x as double))").alias(e),
         )
-        return v.withColumn(n, F.sqrt(F.expr(_DOT.format(a=e, b=e))))
+        return v.withColumn(n, F.sqrt(F.expr(_FOLD.format(a=e, b=e))))
 
     pairs = F.broadcast(side(queries, "query_id", "qe", "qn")).join(
         side(corpus, "neighbor_id", "ce", "cn"), F.col("query_id") != F.col("neighbor_id")
     )
-    raw = F.expr(_DOT.format(a="qe", b="ce")) / F.nullif(F.col("qn") * F.col("cn"), F.lit(0.0))
+    raw = F.expr(_FOLD.format(a="qe", b="ce")) / F.nullif(F.col("qn") * F.col("cn"), F.lit(0.0))
     scored = pairs.select("query_id", "neighbor_id", raw.alias("_raw")).select(
         "query_id", "neighbor_id", pround("_raw", 6).alias("cosine_sim")
     )
@@ -173,17 +177,20 @@ def _catalyst_topk(queries, corpus, k):
 
 
 def test_numpy_topk_identical_to_catalyst_topk(spark):
-    """cosine_topk's numpy scorer returns the Catalyst fold's rows
-    exactly. Each query's partner is planted at cosine 0.9000005, a
-    rounding midpoint at 6 places, so the computed cosine rounds up or
-    down on its last bits and only the same fold agrees on every pair.
-    Exact copies of a partner plant ties that the neighbor_id tie-break
-    decides at the k = 2 cut, a zero query and a zero corpus vector
-    give NULL cosines that rank last, and NULL vec_ids never pair."""
+    """cosine_topk's numpy scorer, and the listed-pair refine
+    ``_cosine_scored`` of the approximate tiers, return the Catalyst
+    fold's rows exactly. Each query's partner is planted at cosine
+    0.9000005, a rounding midpoint at 6 places, so the computed cosine
+    rounds up or down on its last bits and only the same fold agrees on
+    every pair. Exact copies of a partner plant ties that the neighbor_id
+    tie-break decides at the k = 2 cut, a zero query and a zero corpus
+    vector give NULL cosines that rank last, and NULL vec_ids never pair."""
     import numpy as np
 
+    from rws_data_ingester_spark.operators.similarity import _cosine_scored
+
     rng = np.random.default_rng(3)
-    rows, vid, qids = [], 0, []
+    rows, vid, qids, listed = [], 0, [], []
     for i in range(30):
         u = rng.normal(size=64)
         w = rng.normal(size=64)
@@ -191,12 +198,15 @@ def test_numpy_topk_identical_to_catalyst_topk(spark):
         t = 0.9000005
         b = t * u / np.linalg.norm(u) + np.sqrt(1 - t * t) * w / np.linalg.norm(w)
         copies = 1 + i % 3  # partners at an exactly tied cosine
+        listed += [(vid, vid + 1 + j) for j in range(copies)]
         for x in [u] + [b * rng.uniform(0.5, 2.0)] * copies:
             rows.append((vid, [float(y) for y in x]))
             vid += 1
         qids.append(vid - copies - 1)
     rows += [(vid, [0.0] * 64), (vid + 1, [0.0] * 64), (None, rows[0][1])]
     qids.append(vid)
+    # a zero query, and a zero corpus vector listed against real queries
+    listed += [(vid, 1), (vid, vid + 1)] + [(q, vid + 1) for q in qids[::7]]
     rng.shuffle(rows)  # rows arrive out of vec_id order
     corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     queries = corpus.filter(F.col("vec_id").isin(qids) | F.col("vec_id").isNull())
@@ -207,12 +217,27 @@ def test_numpy_topk_identical_to_catalyst_topk(spark):
     assert len(got) == len(qids) * (len(rows) - 2)
     assert {r[2] for r in got if r[0] == vid} == {None}
 
+    # the listed-pair refine, over a subset of the same pairs
+    pairs = (
+        spark.createDataFrame(listed, "query_id long, neighbor_id long")
+        .join(corpus.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")), "query_id")
+        .join(corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ce")), "neighbor_id")
+    )
+    got = sorted(map(tuple, _cosine_scored(pairs).collect()))
+    want = sorted(r[:3] for r in ref if (r[0], r[1]) in set(listed))
+    assert len(want) == len(listed)
+    assert [(q, n, None if c is None else c.hex()) for q, n, c in got] == [
+        (q, n, None if c is None else c.hex()) for q, n, c in want
+    ]
+    assert sum(r[2] is None for r in got) == len(qids[::7]) + 2
+
 
 def test_tile_cosines_bit_identical_to_python_fold():
     """The one numpy cosine equals a pure-Python left-to-right fold bit
-    for bit on every tile shape. A BLAS matmul's summation order depends
-    on the shape and the memory layout: ``a @ b.T`` differs from the fold
-    on most entries of the 1×n and n×1 tiles, ``at.T @ bt`` on the 7×7."""
+    for bit on every tile shape and on listed pairs. A BLAS matmul's
+    summation order depends on the shape and the memory layout: ``a @
+    b.T`` differs from the fold on most entries of the 1×n and n×1
+    tiles, ``at.T @ bt`` on the 7×7."""
     import math
 
     import numpy as np
@@ -231,19 +256,25 @@ def test_tile_cosines_bit_identical_to_python_fold():
         if r > 1:
             a[-1] = 0.0  # a zero vector: a NaN row
         at, bt = np.ascontiguousarray(a.T), np.ascontiguousarray(b.T)
-        sims = _tile_cosines(at, _fold_norms(at), bt, _fold_norms(bt))
+        an, bn = _fold_norms(at), _fold_norms(bt)
+        sims = _tile_cosines(at[:, :, None], an[:, None], bt, bn)
+        # the listed pairs (i, j) as two (d, n) operands
+        ii, jj = np.nonzero(np.ones((r, c), dtype=bool))
+        listed = _tile_cosines(at[:, ii], an[ii], bt[:, jj], bn[jj])
         for i, x in enumerate(a.tolist()):
             for j, y in enumerate(b.tolist()):
                 den = math.sqrt(fold(x, x)) * math.sqrt(fold(y, y))
                 want = fold(x, y) / den if den else math.nan
                 got = float(sims[i, j])
                 assert got.hex() == want.hex(), ((r, c), i, j, got, want)
+        assert [float(x).hex() for x in listed] == [float(x).hex() for x in sims.ravel()]
 
 
 def test_exact_query_collect_is_bounded(spark, monkeypatch):
     """cosine_topk and the PQ tier collect their queries through one
     bounded helper: past _MAX_QUERIES they raise instead of pulling an
-    unbounded query set to the driver."""
+    unbounded query set to the driver. The LSH and IVF tiers, which the
+    error message points to, still run."""
     import pytest
 
     from rws_data_ingester_spark.operators import similarity
@@ -256,6 +287,10 @@ def test_exact_query_collect_is_bounded(spark, monkeypatch):
         cosine_topk(queries, e)
     with pytest.raises(RuntimeError, match="LSH or IVF tier"):
         REGISTRY["simsearch_topk_pq"].fn(spark, SF_DIR)
+    # the tiers the message names carry each query vector on its pair
+    # rows and collect no query set, so the cap does not apply to them
+    for name in ("simsearch_topk_lsh", "simsearch_topk_ivf"):
+        assert REGISTRY[name].fn(spark, SF_DIR).count() == 5 * n
     monkeypatch.setattr(similarity, "_MAX_QUERIES", n)
     assert cosine_topk(queries, e).count() == 5 * n
 
@@ -488,18 +523,16 @@ def test_embedding_dup_ids_plans_one_block_kernel(spark):
 
 def _catalyst_dup_ids(v, block_cols, threshold):
     """The reference the block kernel must reproduce: the blocked Catalyst
-    self-join with the interpreted ``_DOT`` fold. NaN cosines are excluded
+    self-join with the interpreted ``_FOLD`` dot. NaN cosines are excluded
     explicitly — Spark orders NaN above every double, so the bare
     ``>=`` would call a NaN-poisoned pair a dup; the contract is that it
     never is (and scorable() keeps such vectors out of every pipeline)."""
-    from rws_data_ingester_spark.operators.similarity import _DOT
-
-    vn = v.withColumn("n", F.sqrt(F.expr(_DOT.format(a="e", b="e"))))
+    vn = v.withColumn("n", F.sqrt(F.expr(_FOLD.format(a="e", b="e"))))
     a, b = vn.alias("a"), vn.alias("b")
     cond = F.col("a.vec_id") < F.col("b.vec_id")
     for c in block_cols:
         cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-    sim = F.expr(_DOT.format(a="a.e", b="b.e")) / F.nullif(
+    sim = F.expr(_FOLD.format(a="a.e", b="b.e")) / F.nullif(
         F.col("a.n") * F.col("b.n"), F.lit(0.0)
     )
     return a.join(b, cond).select(

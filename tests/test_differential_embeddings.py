@@ -201,7 +201,7 @@ def test_embeddings_oracle_pair_on_ragged_dimensions(spark, ragged_dir, name):
     "name",
     [
         "simsearch_topk_lsh", "simsearch_topk_ivf", "simsearch_topk_pq",
-        "simsearch_lsh_buckets", "simsearch_topk_exact_np",
+        "simsearch_lsh_buckets",
         "pipeline_embedding_dedup_lsh", "pipeline_semantic_dedup",
     ],
 )

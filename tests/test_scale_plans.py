@@ -450,26 +450,39 @@ def test_pround_bind_projection_survives_optimization(spark):
     """The expensive-operand sites bind the raw value in an inner
     projection and round the bound column — pround references its operand
     4x, so if CollapseProject ever starts inlining a non-cheap
-    multi-referenced alias (a Spark-upgrade behavior change), the HOF
-    cosine chain of the LSH/IVF re-rank would silently re-evaluate per
-    reference (measured 2.0 s vs 0.73 s at sf0.1 on the same chain in an
-    all-pairs scorer). Results would stay IDENTICAL, so only this plan
-    assertion can catch the regression: the optimized plan must still
-    carry the bound intermediate column."""
+    multi-referenced alias (a Spark-upgrade behavior change), the
+    interpreted aggregate() fold of embedding_quantize_int8's mean error
+    would silently re-evaluate per reference. Results would stay
+    IDENTICAL, so only this plan assertion can catch the regression: the
+    optimized plan must still carry the bound intermediate column, and
+    the fold must appear once.
+
+    The LSH, IVF and PQ tiers have no such site left: they score their
+    listed candidate pairs in the numpy refine step (_cosine_scored, a
+    MapInArrow), with no Catalyst zip_with fold over the query and
+    candidate vectors. The IVF probe's query-to-centroid L2
+    (zip_with(qe, centroid)) picks cells, reports no score, and stays."""
+    import re
+
     from tests.conftest import SF_DIR
     from rws_data_ingester_spark.plans import REGISTRY
 
-    df = REGISTRY["simsearch_topk_lsh"].fn(spark, SF_DIR)
+    df = REGISTRY["embedding_quantize_int8"].fn(spark, SF_DIR)
     optimized = df._jdf.queryExecution().optimizedPlan().toString()
-    assert "_raw_sim" in optimized, (
-        "the raw-cosine bind was inlined away — pround's operand will "
+    assert "_mean_err" in optimized, (
+        "the mean-error bind was inlined away — pround's operand will "
         "re-evaluate 4x; restore the two-phase projection"
     )
-    # and exactly one cosine fold in the plan: the aggregate() chain for
-    # the dot product must appear once, not once per pround reference
-    assert optimized.count("zip_with(qe") <= 2, (
-        "cosine dot chain duplicated in the optimized plan"
+    assert optimized.count("aggregate(") == 1, (
+        "mean-error fold duplicated in the optimized plan"
     )
+    for name in ("simsearch_topk_lsh", "simsearch_topk_ivf", "simsearch_topk_pq"):
+        plan = REGISTRY[name].fn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+        assert "MapInArrow" in plan, (name, plan)
+        assert not re.search(r"zip_with\((qe|ce)#\d+, (qe|ce)#", plan), (name, plan)
+        assert re.findall(r"zip_with\(qe#\d+, (\w+)", plan) == (
+            ["centroid"] if name == "simsearch_topk_ivf" else []
+        ), (name, plan)
 
 
 # --- round-5 plan pins for the r4 bench drifters -------------------------
